@@ -373,156 +373,75 @@ def _resolve_where(args: argparse.Namespace, spec) -> dict:
     return {model: args.where}
 
 
-#: CompiledCheck.kind -> (Spark JOB identity, variant detail) — the dry-run's
-#: summary of the engine's batching (engine._run_model groups exactly these
-#: ways). The job identity decides row grouping in the printed jobs table
-#: (same identity = genuinely the same Spark job); the detail is the
-#: per-variant annotation printed beneath when a job carries several.
-_EXEC_SHAPE = {
-    "schema_present": ("driver-only schema check (no scan)", None),
-    "schema_type": ("driver-only schema check (no scan)", None),
-    "agg": ("shared multi-aggregate scan", "one pass for ALL agg checks"),
-    "freshness": ("shared multi-aggregate scan", "freshness rides the shared pass"),
-    "retention": ("shared multi-aggregate scan", "retention rides the shared pass"),
-    "unique": ("dedicated exact-uniqueness job (two-phase salted groupBy)", None),
-    "reference": ("anti-join vs the parent table (broadcast when it fits)", None),
-    "join_equality": ("key-join equality vs the reference table", None),
-    "sql": ("user SQL job", None),
-    "group": ("dedicated groupBy job", None),
-    "drift": ("binned aggregate vs --ref-stats snapshot", None),
-    "history": ("metric-history window read (results table)", None),
-    "audio": ("fused audio decode pass",
-              "ONE mapInArrow payload scan shared by every audio rule"),
-    "audio_quality": ("fused audio decode pass", "feature bounds ride it"),
-    "image": ("fused image decode pass", "one mapInArrow payload scan"),
-    "image_fp": ("fused image decode pass", "content-uniqueness rides it"),
-    "image_drift": ("fused image decode pass", "feature histograms ride it"),
-    "image_quality": ("fused image decode pass", "feature bounds ride it"),
-    "video": ("fused video decode pass (one mapInArrow payload scan)", None),
-}
+def _test_config(args: argparse.Namespace, spec, ref_stats: dict):
+    """The ValidationConfig `test` runs under (and `test --dry-run` plans)."""
+    from .engine import ValidationConfig
+
+    return ValidationConfig(
+        partition_col=args.partition_col,
+        checkpoint_dir=args.checkpoint_dir,
+        resume=args.resume,
+        ref_stats=ref_stats,
+        unique_mode=args.unique_mode,
+        reference_mode=args.reference_mode,
+        pctl_mode=args.pctl_mode,
+        # history checks read a results table this engine wrote; default to
+        # the results sink so `--results-path r.parquet` alone closes the loop
+        history_path=args.history_path or args.results_path,
+        history_format=args.history_format,
+        sample_fraction=args.sample_fraction,
+        sample_seed=args.sample_seed,
+        model_where=_resolve_where(args, spec),
+    )
 
 
 def _test_dry_run(spec, args: argparse.Namespace) -> int:
-    """`test --dry-run`: compile every rule and print the execution plan —
-    check inventory, the Spark job each check rides, effective row scopes —
-    without a Spark session or any data access. Compilation is driver-pure
-    (CompiledCheck thunks never need a SparkContext), so this is the free
-    pre-flight for a 10^12-row run: catch typo'd filters, missing columns
-    in scopes, or an accidental per-check fan-out before paying for a scan."""
+    """`test --dry-run`: compile every rule and print the plan the engine
+    executes (dcspark.plan.plan) — each job's id (its phase_timings label),
+    why its checks ride it, the shared scan's sub-passes, its checks, and
+    effective row scopes — without a Spark session or any data access.
+    Compilation is driver-pure (CompiledCheck thunks never need a
+    SparkContext), so this is the free pre-flight for a 10^12-row run: catch
+    typo'd filters, missing columns in scopes, or an accidental per-check
+    fan-out before paying for a scan. Two inputs it can't see are assumed:
+    the --partition-col column exists, and a --ref-stats snapshot carries
+    every drift column and feature."""
     from .compile import create_checks
+    from .plan import plan
 
     server_format = None
     if args.server and args.server in (spec.servers or {}):
         server_format = spec.servers[args.server].format
-    where = _resolve_where(args, spec)
-    checks_by_model = create_checks(spec, server_format)
+    cfg = _test_config(args, spec, {})
+    ref_stats = None if args.ref_stats else {}
     print(f"DRY RUN — compiled plan for {spec.id or args.contract} "
           "(no Spark session, no data read)")
-    for model_name, checks in checks_by_model.items():
+    for model_name, checks in create_checks(spec, server_format).items():
         model = spec.models[model_name]
         print(f"\nmodel {model_name}: {len(checks)} checks")
         scopes = []
         if getattr(model, "filter", None):
             scopes.append(f"contract filter: {model.filter}")
-        if where.get(model_name):
-            scopes.append(f"--where: {where[model_name]}")
+        if cfg.model_where.get(model_name):
+            scopes.append(f"--where: {cfg.model_where[model_name]}")
         if scopes:
             print("  row scope (ANDed, pushed into the source scan): "
                   + " AND ".join(scopes))
-        # Conditional batchings derive from the SAME predicates the engine
-        # applies (engine.plan_approx_unique / plan_fused_audio_fp), so the
-        # printed plan can't drift from actual execution. Two inputs the
-        # dry-run can't see are caveated: whether --partition-col exists in
-        # the data (assumed yes when the flag is given) and whether the
-        # --ref-stats snapshot carries each audio-drift feature (assumed yes
-        # when --ref-stats is given).
-        from .audio import BYTES_COL
-        from .engine import plan_approx_unique, plan_fused_audio_fp
-
-        unique_mode = getattr(args, "unique_mode", "exact") or "exact"
-        approx_unique = set(
-            id(c) for c in plan_approx_unique(
-                [c for c in checks if c.kind == "unique"], unique_mode))
-        audio_scan_will_run = any(
-            c.kind in ("audio", "audio_quality") for c in checks
-        ) or (bool(getattr(args, "ref_stats", None))
-              and any(c.kind == "audio_drift" for c in checks))
-        resume_active = bool(getattr(args, "partition_col", None)
-                             and getattr(args, "checkpoint_dir", None))
-        fused_fp = set(id(c) for c in plan_fused_audio_fp(
-            [c for c in checks if c.kind == "audio_fp"],
-            default_bytes_col=BYTES_COL,
-            audio_scan_will_run=audio_scan_will_run,
-            partition_resume_active=resume_active,
-        ))
-
-        def shape_of(c) -> tuple:
-            """(job identity, variant detail): identity decides grouping —
-            same identity means genuinely the same Spark job; jobs that are
-            SEPARATE per check (dedicated fp jobs with different reasons)
-            carry the reason in the IDENTITY so they never merge."""
-            if c.kind == "unique":
-                if id(c) in approx_unique:
-                    return ("shared multi-aggregate scan",
-                            "HLL approx-distinct sketch — --unique-mode approx")
-                return _EXEC_SHAPE["unique"]
-            if c.kind == "reference":
-                if (getattr(args, "reference_mode", "exact") or "exact") == "approx":
-                    return ("parent Bloom bitset + MAP-ONLY child membership "
-                            "probe (--reference-mode approx; falls back to "
-                            "the exact anti-join over the bitset budget)", None)
-                return _EXEC_SHAPE["reference"]
-            if c.kind == "audio_fp":
-                if id(c) in fused_fp:
-                    return ("fused audio decode pass",
-                            "fingerprints ride the same scan")
-                why = ("checkpoint-resume active" if resume_active
-                       else "custom bytes_col"
-                       if c.params.get("bytes_col", BYTES_COL) != BYTES_COL
-                       else "no co-running audio scan")
-                return (f"dedicated fingerprint decode job ({why})", None)
-            if c.kind == "audio_drift":
-                if audio_scan_will_run:
-                    return ("fused audio decode pass",
-                            "feature histograms ride it IF the --ref-stats "
-                            "snapshot carries the feature")
-                return ("skipped unless --ref-stats provides the feature "
-                        "snapshot (then rides a fused decode pass)", None)
-            return _EXEC_SHAPE.get(c.kind, (f"dedicated job ({c.kind})", None))
-
-        # one printed row per JOB IDENTITY (the same-job batchings — fused
-        # decode pass, shared scan — merge; genuinely separate jobs never
-        # do), with per-variant detail as indented sub-lines when a job
-        # carries more than one
-        by_job: dict = {}
-        for c in checks:
-            job, detail = shape_of(c)
-            by_job.setdefault(job, {}).setdefault(detail, []).append(c)
-        print("  jobs:")
-        for job, variants in sorted(
-                by_job.items(), key=lambda kv: -sum(len(v) for v in kv[1].values())):
-            total_n = sum(len(v) for v in variants.values())
-            details = [d for d in variants if d is not None]
-            if not details:
-                print(f"    {total_n:3d}  {job}")
-                continue
-            if len(variants) == 1:
-                print(f"    {total_n:3d}  {job} ({details[0]})")
-                continue
-            print(f"    {total_n:3d}  {job}")
-            for detail, cs in sorted(variants.items(),
-                                     key=lambda kv: -len(kv[1])):
-                print(f"         {len(cs):3d}x ({detail or 'base job'})")
-        print("  checks:")
-        for c in checks:
-            line = f"    [{c.kind:>14s}] {c.key}"
-            if c.params.get("filter"):
-                line += f"  (filter: {c.params['filter']})"
-            print(line)
-            if c.expected:
-                print(f"{'':22s}expected: {c.expected}")
-            if c.implementation:
-                print(f"{'':22s}impl: {c.implementation}")
+        for job in plan(model_name, checks, cfg, None, ref_stats):
+            print(f"  job {job.id}: {job.reason}")
+            if job.passes:
+                print(f"      passes: {', '.join(job.passes)}")
+            for c in job.checks:
+                line = f"      [{c.kind:>14s}] {c.key}"
+                if c.params.get("filter"):
+                    line += f"  (filter: {c.params['filter']})"
+                if c.key in job.errors:
+                    line += f"  ERROR, no job: {job.errors[c.key]}"
+                print(line)
+                if c.expected:
+                    print(f"{'':24s}expected: {c.expected}")
+                if c.implementation:
+                    print(f"{'':24s}impl: {c.implementation}")
     if args.sample_fraction is not None:
         print(f"\nsample mode: every data check would run on a deterministic "
               f"{args.sample_fraction:.4%} keyed-hash sample "
@@ -545,7 +464,7 @@ def _resolve_mode_profile(args: argparse.Namespace) -> None:
 
 
 def cmd_test(args: argparse.Namespace) -> int:
-    from .engine import ValidationConfig, validate
+    from .engine import validate
     from .io import load_tables, write_results
     from .output import exit_code, print_console, write_junit_xml
     from .spec import DataContractSpecification
@@ -556,22 +475,9 @@ def cmd_test(args: argparse.Namespace) -> int:
         return _test_dry_run(spec, args)
     spark = _build_spark(args.master, args.shuffle_partitions)
     tables = load_tables(spark, spec, server_name=args.server, base_path=args.path)
-    cfg = ValidationConfig(
-        partition_col=args.partition_col,
-        checkpoint_dir=args.checkpoint_dir,
-        resume=args.resume,
-        ref_stats=_load_ref_stats(spark, spec, args.ref_stats) if args.ref_stats else {},
-        unique_mode=args.unique_mode,
-        reference_mode=args.reference_mode,
-        pctl_mode=args.pctl_mode,
-        # history checks read a results table this engine wrote; default to
-        # the results sink so `--results-path r.parquet` alone closes the loop
-        history_path=args.history_path or args.results_path,
-        history_format=args.history_format,
-        sample_fraction=args.sample_fraction,
-        sample_seed=args.sample_seed,
-        model_where=_resolve_where(args, spec),
-    )
+    cfg = _test_config(
+        args, spec,
+        _load_ref_stats(spark, spec, args.ref_stats) if args.ref_stats else {})
     if args.incremental_state:
         # validate ONLY rows appended to the model's Iceberg table since the
         # snapshot recorded in the state file (streaming.py poll shape)

@@ -37,7 +37,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .run_model import ResultEnum
-from .spec import DataContractSpecification, Field, Model, Quality, to_spark_data_type
+from .spec import DataContractSpecification, Field, Quality, to_spark_data_type
 
 # Built-in format regexes (reference TODO at data_contract_checks.py:63; uuid regex
 # from engines/fastjsonschema/check_jsonschema.py:245).
@@ -107,10 +107,6 @@ def _invalid_count(col: str, invalid_pred: Column) -> Column:
     return F.coalesce(
         F.sum(F.when(F.col(col).isNotNull() & invalid_pred, 1).otherwise(0)), F.lit(0)
     )
-
-
-def _fmt(v: Any) -> str:
-    return str(v)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,5 @@
-"""Validation executor: plans and runs all compiled checks with minimal passes.
+"""Validation executor: runs each model's job plan (dcspark/plan.py) with
+minimal passes.
 
 Execution plan per model (scale rationale in SURVEY.md §4):
 
@@ -41,12 +42,29 @@ from pyspark.sql import functions as F
 
 from . import audio as audio_mod
 from . import drift as drift_mod
+from . import plan as plan_mod
 from . import tdigest as td_mod
 from .compile import CompiledCheck, create_checks
 from .run_model import Check, ResultEnum, Run
-from .spec import DataContractSpecification, resolve_schema_field, to_spark_data_type
+from .spec import DataContractSpecification, resolve_schema_field
 
 VIOLATION_CAP_DEFAULT = 500
+
+#: column-bound check kinds gated on their columns before planning, in the
+#: order their "column missing" errors record
+_GATE_ORDER = {"agg": 0, "freshness": 0, "retention": 0, "drift": 1,
+               "unique": 2, "reference": 3, "group": 4}
+
+#: check kind -> failure wording for checks whose metric counts violating
+#: rows, pairs or groups (zero passes unless the rule has its own evaluator)
+_COUNT_FAILURE = {
+    "group": "group(s) violate {threshold}",
+    "audio_fp": "near-duplicate clip pair(s)",
+    "video": "video payload(s) failed decode or stream-header conformance",
+    "image": "image payload(s) failed decode or dimension conformance",
+    "image_quality": "image(s) outside decoded-feature bounds",
+    "image_fp": "near-duplicate image pair(s)",
+}
 
 VIOLATIONS_DDL = (
     "run_id string, partition_id string, check_key string, clip_id string, "
@@ -143,7 +161,7 @@ class ValidationResult:
     results: List[dict]          # validation_results rows (FIXTURES.md §4)
     violations: Optional[DataFrame]
     metrics: Dict[str, Optional[float]]  # check key -> global metric value
-    # model -> {job label -> wall seconds}. Jobs overlap (driver-side thread
+    # model -> {PlannedJob.id -> wall seconds}. Jobs overlap (driver-side thread
     # pool), so labels sum to MORE than compute_phase_wall — each label is
     # that job's own start->end wall, the ops-facing "which check family is
     # the expensive one" answer at any scale
@@ -247,41 +265,6 @@ def _missing_table_error(path: str, exc: Exception) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# job-shape planning predicates — shared by the engine and `test --dry-run`
-# (cli._test_dry_run), so the printed plan derives from the SAME logic the
-# engine executes and cannot drift from it.
-# ---------------------------------------------------------------------------
-
-def plan_approx_unique(unique_checks: List["CompiledCheck"], unique_mode: str
-                       ) -> List["CompiledCheck"]:
-    """Which unique checks move into the shared scan as HLL sketches under
-    ``--unique-mode approx``. Composite-key and row-filtered uniqueness keep
-    the exact dedicated job: a composite PK is a certification, and a scoped
-    check can't ride the unscoped shared scan's sketch."""
-    if unique_mode != "approx":
-        return []
-    return [c for c in unique_checks
-            if not c.params.get("key_cols") and not c.params.get("filter")]
-
-
-def plan_fused_audio_fp(fp_checks: List["CompiledCheck"], *,
-                        default_bytes_col: str,
-                        audio_scan_will_run: bool,
-                        partition_resume_active: bool
-                        ) -> List["CompiledCheck"]:
-    """Which audio-fingerprint checks ride the ONE fused decode pass. Only fp
-    checks on the default payload column can (the shared scan decodes
-    ``BYTES_COL``), only when another audio scan runs anyway, and never when
-    the per-partition checkpoint-manifest path is active (near-dup pairs are
-    global across partitions and don't fit the per-partition resume model)."""
-    fusible = [c for c in fp_checks
-               if c.params.get("bytes_col", default_bytes_col) == default_bytes_col]
-    if fusible and audio_scan_will_run and not partition_resume_active:
-        return fusible
-    return []
-
-
-# ---------------------------------------------------------------------------
 # engine
 # ---------------------------------------------------------------------------
 
@@ -378,8 +361,7 @@ class Validator:
 
     def _run_model(self, model_name: str, checks: List[CompiledCheck], df: Optional[DataFrame]) -> None:
         if df is None:
-            for chk in checks:
-                self._record(chk, None, ResultEnum.error, f"table {model_name} not provided", None)
+            self._record_all(checks, ResultEnum.error, f"table {model_name} not provided")
             return
 
         # dataset filter (SodaCL table-filter analog): the contract's
@@ -401,206 +383,107 @@ class Validator:
         if self.config.sample_fraction is not None:
             df = self._sample_frame(model_name, df)
 
-        schema_checks = [c for c in checks if c.kind in ("schema_present", "schema_type")]
-        agg_checks = [c for c in checks if c.kind in ("agg", "freshness", "retention") or c.agg_alias == "__row_count"]
-        drift_checks = [c for c in checks if c.kind == "drift"]
-        unique_checks = [c for c in checks if c.kind == "unique"]
-        reference_checks = [c for c in checks if c.kind == "reference"]
-        sql_checks = [c for c in checks if c.kind == "sql"]
-        audio_checks = [c for c in checks if c.kind == "audio"]
-        join_eq_checks = [c for c in checks if c.kind == "join_equality"]
-        group_checks = [c for c in checks if c.kind == "group"]
-        audio_fp_checks = [c for c in checks if c.kind == "audio_fp"]
-        # the whole image family (decode-conformance, signal-quality,
-        # content-uniqueness, luminance-drift) shares ONE fused decode pass
-        # per payload column
-        image_family = [c for c in checks
-                        if c.kind in ("image", "image_quality", "image_fp",
-                                      "image_drift")]
-        video_checks = [c for c in checks if c.kind == "video"]
-        audio_drift_checks = [c for c in checks if c.kind == "audio_drift"]
-        audio_quality_checks = [c for c in checks if c.kind == "audio_quality"]
-        history_checks = [c for c in checks if c.kind == "history"]
-
-        self._run_schema_checks(schema_checks, df)
-
-        # checks on absent columns can't scan — report error, drop from data
-        # path; dotted paths resolve through nested structs
-        def runnable(chk: CompiledCheck) -> bool:
-            if chk.kind == "sql":
-                return True
-            req = chk.params.get("require_cols") or (
-                [chk.field] if chk.field else [])
-            for c in req:
-                if resolve_schema_field(df.schema, c) is None:
-                    self._record(chk, None, ResultEnum.error,
-                                 f"column {c} missing", None)
-                    return False
-            flt = chk.params.get("filter")
-            if flt:
-                # eager analysis of the scope expression: a typo'd filter
-                # column would otherwise raise AnalysisException inside the
-                # SHARED scan and abort the whole run — the same isolation
-                # the missing-column path above gives a check's own column
-                try:
-                    df.filter(F.expr(flt)).schema
-                except Exception as e:  # noqa: BLE001 — analysis error class varies
-                    self._record(chk, None, ResultEnum.error,
-                                 f"invalid filter {flt!r}: "
-                                 f"{str(e).splitlines()[0][:200]}", None)
-                    return False
-            return True
-
-        agg_checks = [c for c in agg_checks if runnable(c)]
-        drift_checks = [c for c in drift_checks if runnable(c)]
-        unique_checks = [c for c in unique_checks if runnable(c)]
-        reference_checks = [c for c in reference_checks if runnable(c)]
-        group_checks = [c for c in group_checks if runnable(c)]
-
-        # uniqueness joins the shared scan as an HLL sketch in approx mode —
-        # the dedicated groupBy job (and its shuffle) disappears entirely
-        # (predicate shared with `test --dry-run`: plan_approx_unique)
-        approx_unique = plan_approx_unique(unique_checks, self.config.unique_mode)
-        unique_checks = [c for c in unique_checks if c not in approx_unique]
-
-        # Content-uniqueness shares the ONE decode pass whenever another audio
-        # scan will run anyway (decode-conformance, or loudness-drift with a
-        # resolvable snapshot) — a second full decode of the payload corpus is
-        # the dominant avoidable cost at scale. Only fp checks on the default
-        # payload column can ride the shared scan (it decodes BYTES_COL);
-        # a custom bytes_col keeps its standalone pass. The checkpoint-manifest
-        # path also keeps the standalone pass: near-dup pairs are global
-        # across partitions and don't fit the per-partition resume model.
-        part_col_ok = bool(
-            self.config.partition_col and self.config.partition_col in df.columns)
-        audio_scan_will_run = bool(audio_checks) or bool(audio_quality_checks) or any(
-            self.config.ref_stats.get(model_name, {}).get(f"audio:{c.params['feature']}")
-            for c in audio_drift_checks)
-        # (predicate shared with `test --dry-run`: plan_fused_audio_fp)
-        fused_fp_checks = plan_fused_audio_fp(
-            audio_fp_checks,
-            default_bytes_col=audio_mod.BYTES_COL,
-            audio_scan_will_run=audio_scan_will_run,
-            partition_resume_active=bool(part_col_ok and self.config.checkpoint_dir),
-        )
-        audio_fp_checks = [c for c in audio_fp_checks if c not in fused_fp_checks]
+        # checks on absent columns (or with an unanalyzable scope) can't
+        # scan: they record an error right after the schema checks
+        unrunnable = self._unrunnable(checks, df)
+        jobs = plan_mod.plan(
+            model_name, [c for c in checks if c.key not in unrunnable],
+            self.config, df.schema, self.config.ref_stats)
+        table = self._job_table(model_name, df)
+        run = {job.id: self._timed(model_name, job.id, lambda j=job: table[j.kind](j))
+               for job in jobs}
+        for job in jobs:
+            if job.kind == "schema":
+                run[job.id]()
+        for chk, why in unrunnable.values():
+            self._record(chk, None, ResultEnum.error, why, None)
 
         # Compute phase: independent Spark jobs submitted CONCURRENTLY from
         # driver threads (the scheduler overlaps them across free task slots),
         # collapsing ~10 sequential small-job walls into a few waves — the
         # dominant fixed cost at high core counts. Only the shared scan
-        # records during this phase; every other job returns a result dict
-        # that the main thread records afterwards in a fixed order, so check
-        # ordering stays deterministic.
-        audio_label = ("shared_scan+fused_decode"
-                       if (audio_scan_will_run or fused_fp_checks)
-                       else "shared_scan")
-        thunks: List[Any] = [
-            self._timed(model_name, audio_label, lambda: self._run_shared_scan(
-                model_name, df, agg_checks, drift_checks, audio_checks, approx_unique,
-                audio_fp_checks=fused_fp_checks, audio_drift_checks=audio_drift_checks,
-                audio_quality_checks=audio_quality_checks))
-        ]
-        thunks += [
-            self._timed(model_name, f"unique:{chk.key}",
-                        (lambda c=chk: ("unique", c, self._unique_compute(df, c))))
-            for chk in unique_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"reference:{chk.key}",
-                        (lambda c=chk: ("reference", c, self._reference_compute(df, c))))
-            for chk in reference_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"join_eq:{chk.key}",
-                        (lambda c=chk: ("join_eq", c, self._join_equality_compute(df, c))))
-            for chk in join_eq_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"group:{chk.key}",
-                        (lambda c=chk: ("group", c, self._group_compute(df, c))))
-            for chk in group_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"audio_fp:{chk.key}",
-                        (lambda c=chk: ("audio_fp", c, self._audio_fp_compute(model_name, df, c))))
-            for chk in audio_fp_checks
-        ]
-        image_groups: Dict[str, List[CompiledCheck]] = {}
-        for chk in image_family:
-            image_groups.setdefault(chk.params["bytes_col"], []).append(chk)
-        thunks += [
-            self._timed(model_name, f"image_decode:{bc}",
-                        (lambda g=grp, bc=bc: (
-                            "image_family", g,
-                            self._image_family_compute(model_name, df, g, bc))))
-            for bc, grp in sorted(image_groups.items())
-        ]
-        thunks += [
-            self._timed(model_name, f"video:{chk.key}",
-                        (lambda c=chk: ("video", c, self._video_compute(model_name, df, c))))
-            for chk in video_checks
-        ]
-        thunks += [
-            self._timed(model_name, f"sql:{chk.key}",
-                        (lambda c=chk: ("sql", c, self._sql_compute(c))))
-            for chk in sql_checks
-        ]
+        # records during this phase; every other job returns its per-check
+        # result dicts, recorded afterwards on the main thread in plan order,
+        # so check ordering stays deterministic.
+        phase = [job for job in jobs
+                 if job.kind != "schema" and job.kind not in plan_mod.POST_PHASE_KINDS]
         import time as _time
         t_phase = _time.perf_counter()
-        results = self._parallel(thunks)
+        results = self._parallel([run[job.id] for job in phase])
         ph = self._phase_timings.setdefault(model_name, {})
         ph["compute_phase_wall"] = round(_time.perf_counter() - t_phase, 3)
         self.run.log_info(
             f"{model_name} phase walls (s, concurrent jobs overlap): "
             + ", ".join(f"{k}={v}" for k, v in
                         sorted(ph.items(), key=lambda kv: -kv[1])))
-        for item in results[1:]:
-            kind, chk, res = item
-            if kind == "unique":
-                self._record_unique(chk, res)
-            elif kind == "reference":
-                self._record_reference(chk, res)
-            elif kind == "join_eq":
-                self._record_join_equality(chk, res)
-            elif kind == "group":
-                self._record_group(chk, res)
-            elif kind == "audio_fp":
-                self._record_audio_fp(chk, res)
-            elif kind == "video":
-                self._record_video(chk, res)
-            elif kind == "image_family":
-                # chk is the group list, res maps check key -> result dict;
-                # record in compile order so check ordering stays stable
-                for c in chk:
-                    r = res[c.key]
-                    if c.kind == "image":
-                        self._record_image(c, r)
-                    elif c.kind == "image_quality":
-                        self._record_image_quality(c, r)
-                    elif c.kind == "image_drift":
-                        self._record_image_drift(c, r)
-                    else:
-                        self._record_image_fp(c, r)
-            else:
-                self._record_sql(chk, res)
+        for job, res in zip(phase, results):
+            if res is not None:
+                for chk in job.checks:
+                    self._record_result(chk, res[chk.key])
 
         # History checks judge the CURRENT run's metrics against the trailing
-        # window in the results table, so they must run after every other
-        # check of this model has recorded (their watched metrics are filled
-        # by the loop above). They append at the end of the model's check
-        # order; watched keys must be produced by this model's own checks
-        # (cross-model watches would race the parallel per-model recorders).
-        if history_checks and self.config.sample_fraction is not None:
-            # a sampled run's metrics are raw sample counts — judging them
-            # against a full-run series (or letting them join it) would make
-            # every change/anomaly rule fire on the sampling itself
-            for chk in history_checks:
-                self._record(chk, None, ResultEnum.passed,
-                             "skipped: sampled run (history judges and "
-                             "feeds full-run metrics only)", None)
-        elif history_checks:
-            self._run_history_checks(model_name, history_checks)
+        # window in the results table, so they run after every other check
+        # of this model has recorded. Watched keys must be produced by this
+        # model's own checks (cross-model watches would race the parallel
+        # per-model recorders).
+        for job in jobs:
+            if job.kind in plan_mod.POST_PHASE_KINDS:
+                run[job.id]()
+
+    def _unrunnable(self, checks: List[CompiledCheck], df: DataFrame
+                    ) -> Dict[str, Tuple[CompiledCheck, str]]:
+        """check key -> (check, error reason) for column-bound checks whose
+        column is absent (dotted paths resolve through nested structs) or
+        whose ``filter:`` fails analysis — in the order they record."""
+        out: Dict[str, Tuple[CompiledCheck, str]] = {}
+        for chk in sorted((c for c in checks if c.kind in _GATE_ORDER),
+                          key=lambda c: _GATE_ORDER[c.kind]):
+            req = chk.params.get("require_cols") or (
+                [chk.field] if chk.field else [])
+            missing = [c for c in req if resolve_schema_field(df.schema, c) is None]
+            if missing:
+                out[chk.key] = (chk, f"column {missing[0]} missing")
+                continue
+            flt = chk.params.get("filter")
+            if flt:
+                # eager analysis of the scope expression: a typo'd filter
+                # column would otherwise raise AnalysisException inside the
+                # SHARED scan and abort the whole run
+                try:
+                    df.filter(F.expr(flt)).schema
+                except Exception as e:  # noqa: BLE001 — analysis error class varies
+                    out[chk.key] = (chk, f"invalid filter {flt!r}: "
+                                         f"{str(e).splitlines()[0][:200]}")
+        return out
+
+    def _job_table(self, model_name: str, df: DataFrame) -> Dict[str, Any]:
+        """PlannedJob.kind -> compute(job). A compute returns {check key:
+        result dict} for _record_result, or None when the job records as it
+        runs (schema, shared scan, history)."""
+        def each(compute):
+            return lambda job: {c.key: compute(c) for c in job.checks}
+
+        return {
+            "schema": lambda job: self._run_schema_checks(job.checks, df),
+            "shared_scan": lambda job: self._run_shared_scan(model_name, df, job),
+            "unique": each(lambda c: self._unique_compute(df, c)),
+            "reference": each(lambda c: self._reference_compute(df, c)),
+            "join_eq": each(lambda c: self._join_equality_compute(df, c)),
+            "group": each(lambda c: self._group_compute(df, c)),
+            "audio_fp": each(lambda c: self._audio_fp_compute(model_name, df, c)),
+            "image_family": lambda job: self._image_family_compute(
+                model_name, df, job.checks, job.checks[0].params["bytes_col"]),
+            "video": each(lambda c: self._video_compute(model_name, df, c)),
+            "sql": each(self._sql_compute),
+            "history": lambda job: self._run_history_checks(model_name, job.checks),
+            "skipped": lambda job: self._record_all(
+                job.checks, ResultEnum.passed, job.reason),
+        }
+
+    def _record_all(self, checks: List[CompiledCheck], result: ResultEnum,
+                    reason: str) -> None:
+        for chk in checks:
+            self._record(chk, None, result, reason, None)
 
     def _run_history_checks(
         self, model_name: str, checks: List[CompiledCheck]
@@ -663,9 +546,9 @@ class Validator:
             self._record(chk, stat, result, reason, None, diagnostics=diag)
 
     def _timed(self, model: str, label: str, fn):
-        """Wrap a compute-phase thunk to record its own wall seconds under
+        """Wrap a planned job's thunk to record its own wall seconds under
         phase_timings[model][label] (threads overlap; dict writes are
-        GIL-atomic and labels are unique per model)."""
+        GIL-atomic and labels — PlannedJob ids — are unique per model)."""
         import time as _time
 
         def run():
@@ -719,9 +602,12 @@ class Validator:
     # -- shared multi-aggregate scan (+ audio; + checkpoint/resume) ----------
 
     def _shared_agg_specs(
-        self, model_name: str, agg_checks: List[CompiledCheck], drift_checks: List[CompiledCheck]
+        self, model_name: str, agg_checks: List[CompiledCheck],
+        drift_checks: List[CompiledCheck], snapshots: Optional[Dict[str, dict]] = None,
     ) -> Tuple[Dict[str, Column], Dict[str, str], List[dict]]:
-        """Shared-scan aggregate columns + merge ops + drift bucket-job specs.
+        """Shared-scan aggregate columns + merge ops + drift bucket-job specs
+        for the drift checks whose snapshot the plan resolved (``snapshots``:
+        check key -> snapshot, PlannedJob.snapshots).
 
         Drift grids are NOT inlined as per-grid-point aggregate columns: a
         199-point grid would push the aggregate past the whole-stage-codegen
@@ -739,26 +625,13 @@ class Validator:
                 if alias not in exprs:
                     exprs[alias] = expr_thunk()
                     ops[alias] = _merge_op(alias, chk.kind)
-        drift_jobs: List[dict] = []
-        for chk in drift_checks:
-            stats = self.config.ref_stats.get(model_name, {}).get(chk.params["column"])
-            if stats is None:
-                continue
-            if "categories" in stats and chk.params["method"] != "psi":
-                # KS needs an ordered domain; categorical snapshots are
-                # frequency-only — surface a config error instead of a
-                # meaningless statistic
-                chk.params["_invalid"] = (
-                    "categorical snapshot supports method psi only")
-                continue
-            prefix = f"__drift__{chk.key}"
-            chk.params["_prefix"] = prefix
-            chk.params["_stats"] = stats
-            drift_jobs.append({
-                "prefix": prefix, "column": chk.params["column"],
-                "stats": stats, "method": chk.params["method"],
-            })
-            for alias in drift_mod.drift_aliases(prefix, stats, chk.params["method"]):
+        drift_jobs = [
+            {"prefix": _drift_prefix(chk), "column": chk.params["column"],
+             "stats": snapshots[chk.key], "method": chk.params["method"]}
+            for chk in drift_checks if chk.key in (snapshots or {})
+        ]
+        for job in drift_jobs:
+            for alias in drift_mod.drift_aliases(job["prefix"], job["stats"], job["method"]):
                 ops[alias] = "sum"
         return exprs, ops, drift_jobs
 
@@ -937,20 +810,19 @@ class Validator:
     def _hll_aliases(chk: CompiledCheck) -> Tuple[str, str]:
         return f"{chk.field}__nonnull_count", f"{chk.field}__hll_sketch"
 
-    def _run_shared_scan(
-        self,
-        model_name: str,
-        df: DataFrame,
-        agg_checks: List[CompiledCheck],
-        drift_checks: List[CompiledCheck],
-        audio_checks: List[CompiledCheck],
-        approx_unique: Optional[List[CompiledCheck]] = None,
-        audio_fp_checks: Optional[List[CompiledCheck]] = None,
-        audio_drift_checks: Optional[List[CompiledCheck]] = None,
-        audio_quality_checks: Optional[List[CompiledCheck]] = None,
-    ) -> None:
-        exprs, ops, drift_jobs = self._shared_agg_specs(model_name, agg_checks, drift_checks)
-        for chk in approx_unique or []:
+    def _run_shared_scan(self, model_name: str, df: DataFrame,
+                         job: plan_mod.PlannedJob) -> None:
+        """Run the planned shared scan's sub-passes (``job.passes``) and record
+        every check that rides it."""
+        agg_checks = job.of(*plan_mod.AGG_KINDS)
+        drift_checks = job.of("drift")
+        audio_checks = job.of("audio")
+        approx_unique = job.of("unique")
+        audio_fp_checks = job.of("audio_fp")
+        audio_quality_checks = job.of("audio_quality")
+        exprs, ops, drift_jobs = self._shared_agg_specs(
+            model_name, agg_checks, drift_checks, job.snapshots)
+        for chk in approx_unique:
             nn_alias, sk_alias = self._hll_aliases(chk)
             col = chk.field
             exprs[nn_alias] = F.coalesce(
@@ -970,33 +842,28 @@ class Validator:
             rerouted_aliases = self._reroute_bytes_aliases(agg_checks, exprs, ops)
 
         # loudness-drift: per-clip decoded-feature histograms ride the SAME
-        # decode pass (row_type='fh' rows in the compact frame); a check
-        # without a reference snapshot errors here and never costs a scan
+        # decode pass (row_type='fh' rows in the compact frame); a check the
+        # plan found no snapshot for records its error and never costs a scan
         feat_bins: Dict[str, List[float]] = {}
         audio_drift_eval: List[Tuple[CompiledCheck, dict]] = []
-        for chk in audio_drift_checks or []:
-            feature = chk.params["feature"]
-            stats = self.config.ref_stats.get(model_name, {}).get(f"audio:{feature}")
-            if not stats:
-                self._record(
-                    chk, None, ResultEnum.error,
-                    f"no reference snapshot for audio feature {feature} "
-                    "(build with audio.audio_feature_frame + drift.build_ref_stats, "
-                    "stored under ref_stats key 'audio:" + feature + "')", None)
+        for chk in job.of("audio_drift"):
+            if chk.key in job.errors:
+                self._record(chk, None, ResultEnum.error, job.errors[chk.key], None)
                 continue
-            feat_bins[feature] = [float(x) for x in stats["bin_edges"]]
+            stats = job.snapshots[chk.key]
+            feat_bins[chk.params["feature"]] = [float(x) for x in stats["bin_edges"]]
             audio_drift_eval.append((chk, stats))
 
         # signal-quality: per-clip decoded-feature bounds, also evaluated
         # inside the one decode pass ('fq' count + capped 'fv' violation rows)
         feat_limits: List[Tuple[str, Optional[float], Optional[float]]] = [
             (c.params["feature"], c.params["minimum"], c.params["maximum"])
-            for c in audio_quality_checks or []
+            for c in audio_quality_checks
         ]
         # speaking-rate rules carry the transcript column the decode scan
         # must add as a JVM length; one text column per model
         rate_cols = {c.params["text_column"]
-                     for c in audio_quality_checks or []
+                     for c in audio_quality_checks
                      if c.params.get("text_column")}
         if len(rate_cols) > 1:
             raise ValueError(
@@ -1025,7 +892,7 @@ class Validator:
         # into the metric rows from driver-merged digests after the scan
         pctl_specs: Dict[str, Tuple[str, float]] = {}
         pctl_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
-        if pctl_aliases and self.config.pctl_mode == "sketch":
+        if "t-digest" in job.passes:
             for chk in agg_checks:
                 if chk.agg_alias in pctl_aliases and chk.agg_alias not in pctl_specs:
                     # a row-scoped (filter:) percentile keeps the GK path:
@@ -1055,7 +922,7 @@ class Validator:
                 pctl_cols=pctl_cols or None,
                 rate_text_col=rate_text_col,
             )
-            if pctl_aliases and len(part_rows) > 1:
+            if "percentile global" in job.passes and len(part_rows) > 1:
                 pctl_row = pctl_job()
         else:
             agg_list = [v.alias(k) for k, v in exprs.items()]
@@ -1123,12 +990,10 @@ class Validator:
             thunks: List[Any] = [main_job]
             if drift_jobs:
                 thunks.append(drift_job)
-            run_audio = (
-                audio_chk is not None or bool(feat_bins)
-                or bool(audio_fp_checks) or bool(feat_limits))
+            run_audio = "fused decode" in job.passes
             if run_audio:
                 thunks.append(audio_job)
-            run_pctl = bool(pctl_aliases) and partition_col is not None
+            run_pctl = "percentile global" in job.passes
             if run_pctl:
                 thunks.append(pctl_job)
 
@@ -1214,20 +1079,15 @@ class Validator:
             if result == ResultEnum.failed and chk.violation_predicate is not None:
                 failed_agg.append(chk)
 
-        for chk in approx_unique or []:
+        for chk in approx_unique:
             self._record_approx_unique(chk, part_rows, global_row, partition_col)
 
         for chk in drift_checks:
-            if "_invalid" in chk.params:
-                self._record(chk, None, ResultEnum.error,
-                             f"{chk.name}: {chk.params['_invalid']}", None)
-                continue
-            if "_stats" not in chk.params:
-                self._record(chk, None, ResultEnum.error,
-                             f"no reference snapshot for column {chk.params['column']}", None)
+            if chk.key in job.errors:
+                self._record(chk, None, ResultEnum.error, job.errors[chk.key], None)
                 continue
             stat = drift_mod.drift_statistic(
-                global_row, chk.params["_stats"], chk.params["method"], chk.params["_prefix"]
+                global_row, job.snapshots[chk.key], chk.params["method"], _drift_prefix(chk)
             )
             result, reason = chk.eval_metric(stat, global_row)
             self._record(chk, stat, result, reason, global_row.get("__total_count"))
@@ -1263,7 +1123,7 @@ class Validator:
                     self.spark.createDataFrame(vio_rows, schema=VIOLATIONS_DDL))
 
         for chk, res in fused_fp_results:
-            self._record_audio_fp(chk, res)
+            self._record_result(chk, res)
 
         for chk, stats in audio_drift_eval:
             got = audio_fhists.get(chk.params["feature"], {})
@@ -1561,17 +1421,8 @@ class Validator:
                 vio_rows = vio.collect()
         finally:
             dup.unpersist()
-        return {"metric": metric, "dup_values": stats["dup_values"],
-                "dup_rows": stats["dup_rows"], "vio_rows": vio_rows}
-
-    def _record_unique(self, chk: CompiledCheck, res: dict) -> None:
-        metric = res["metric"]
-        result, reason = chk.eval_metric(metric, {})
-        self._record(chk, metric, result, reason, None,
-                     diagnostics={"dup_values": res["dup_values"], "dup_rows": res["dup_rows"]})
-        if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+        return {"metric": metric, "vio_rows": vio_rows, "diagnostics": {
+            "dup_values": stats["dup_values"], "dup_rows": stats["dup_rows"]}}
 
     # -- per-group aggregate thresholds (group quality checks) ----------------
 
@@ -1621,20 +1472,6 @@ class Validator:
         finally:
             viol.unpersist()
         return {"metric": metric, "vio_rows": vio_rows}
-
-    def _record_group(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        result = ResultEnum.passed if metric == 0 else ResultEnum.failed
-        reason = None if metric == 0 else (
-            f"{chk.name}: {int(metric)} group(s) violate {chk.params['threshold']}"
-        )
-        self._record(chk, metric, result, reason, None)
-        if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
 
     # -- audio content uniqueness (fingerprint near-dup) ----------------------
 
@@ -1866,14 +1703,7 @@ class Validator:
             counts[int(r["__b"])] += int(r["count"])
         stat = drift_mod.drift_statistic_from_counts(
             counts, stats, chk.params["method"])
-        return {"stat": stat, "rows": sum(counts)}
-
-    def _record_image_drift(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        result, reason = chk.eval_metric(res["stat"], {})
-        self._record(chk, res["stat"], result, reason, res["rows"])
+        return {"metric": stat, "rows": sum(counts)}
 
     def _image_fp_eval(self, compact: DataFrame, chk: CompiledCheck) -> dict:
         """Content uniqueness: blocked Hamming pairs over the compact
@@ -1965,50 +1795,6 @@ class Validator:
         return self._count_and_sample(
             bad, chk, id_expr=F.coalesce(F.col("id_a"), F.lit("<null-id>")),
             observed_expr=F.col("__observed"))
-
-    def _record_video(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} video payload(s) "
-                                 "failed decode or stream-header conformance"))
-
-    def _record_image(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} image payload(s) "
-                                 "failed decode or dimension conformance"))
-
-    def _record_image_quality(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} image(s) outside "
-                                 "decoded-feature bounds"))
-
-    def _record_image_fp(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res, lambda m: (f"{chk.name}: {int(m)} near-duplicate "
-                                 "image pair(s)"))
-
-    def _record_zero_default(self, chk: CompiledCheck, res: dict,
-                             fail_reason) -> None:
-        """Shared recorder for metric-counts-violations checks: evaluator if
-        configured, else zero-is-pass; violation rows appended when present."""
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        evaluator = chk.params.get("evaluator")
-        if evaluator is not None:
-            result, reason = evaluator(metric, {})
-        else:
-            result = ResultEnum.passed if metric == 0 else ResultEnum.failed
-            reason = None if metric == 0 else fail_reason(metric)
-        self._record(chk, metric, result, reason, None)
-        if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
-
-    def _record_audio_fp(self, chk: CompiledCheck, res: dict) -> None:
-        self._record_zero_default(
-            chk, res,
-            lambda m: f"{chk.name}: {int(m)} near-duplicate clip pair(s)")
 
     # -- referential integrity (anti-join) ------------------------------------
 
@@ -2190,26 +1976,6 @@ class Validator:
                        "bloom_fpp": fpp, "parent_keys_est": n_b}
         return orphans, diagnostics
 
-    def _record_reference(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        result, reason = chk.eval_metric(metric, {})
-        self._record(chk, metric, result, reason, None,
-                     diagnostics=res.get("diagnostics"))
-        # per-partition orphan attribution (partition_col runs): partitions
-        # WITH orphans get their own failed row — the "which ingest
-        # partition went bad" answer; clean partitions are covered by the
-        # global row (enumerating them would need another child scan)
-        for pid, pm in sorted((res.get("part_metrics") or {}).items()):
-            if pm > 0:
-                pres, preason = chk.eval_metric(pm, {})
-                self._record(chk, pm, pres, preason, None, partition_id=pid)
-        if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
-
     # -- transcript equality vs oracle reference (join check) ------------------
 
     def _join_equality_compute(self, df: DataFrame, chk: CompiledCheck) -> dict:
@@ -2269,23 +2035,6 @@ class Validator:
         return {"metric": metric, "vio_rows": vio_rows,
                 "part_metrics": part_metrics}
 
-    def _record_join_equality(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        metric = res["metric"]
-        result, reason = chk.eval_metric(metric, {})
-        self._record(chk, metric, result, reason, None)
-        # per-partition attribution, same contract as _record_reference:
-        # partitions WITH mismatches get their own failed row
-        for pid, pm in sorted((res.get("part_metrics") or {}).items()):
-            if pm > 0:
-                pres, preason = chk.eval_metric(pm, {})
-                self._record(chk, pm, pres, preason, None, partition_id=pid)
-        if res["vio_rows"]:
-            self._violation_frames.append(
-                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
-
     # -- SQL quality ----------------------------------------------------------
 
     def _sql_compute(self, chk: CompiledCheck) -> dict:
@@ -2298,13 +2047,6 @@ class Validator:
         except Exception as e:  # surfaced as error check, not crash (soda parity)
             return {"error": f"query failed: {e}"}
         return {"metric": metric}
-
-    def _record_sql(self, chk: CompiledCheck, res: dict) -> None:
-        if "error" in res:
-            self._record(chk, None, ResultEnum.error, res["error"], None)
-            return
-        result, reason = chk.eval_metric(res["metric"], {})
-        self._record(chk, res["metric"], result, reason, None)
 
     # -- checkpoint / resume ---------------------------------------------------
 
@@ -2651,6 +2393,37 @@ class Validator:
 
     # -- result recording -------------------------------------------------------
 
+    def _record_result(self, chk: CompiledCheck, res: dict) -> None:
+        """Record one check from its job's result dict: ``error``, or
+        ``metric`` plus optional ``rows`` (row count), ``diagnostics``,
+        ``part_metrics`` (partitions WITH violations get their own row — the
+        "which ingest partition went bad" answer; clean partitions are
+        covered by the global row) and capped ``vio_rows``."""
+        if "error" in res:
+            self._record(chk, None, ResultEnum.error, res["error"], None)
+            return
+        failure = _COUNT_FAILURE.get(chk.kind)
+        evaluator = chk.params.get("evaluator") if failure else chk.eval_metric
+
+        def judge(metric):
+            if evaluator is not None:
+                return evaluator(metric, {})
+            if metric == 0:
+                return ResultEnum.passed, None
+            return ResultEnum.failed, (
+                f"{chk.name}: {int(metric)} " + failure.format(**chk.params))
+
+        metric = res["metric"]
+        result, reason = judge(metric)
+        self._record(chk, metric, result, reason, res.get("rows"),
+                     diagnostics=res.get("diagnostics"))
+        for pid, pm in sorted((res.get("part_metrics") or {}).items()):
+            if pm > 0:
+                self._record(chk, pm, *judge(pm), None, partition_id=pid)
+        if res.get("vio_rows"):
+            self._violation_frames.append(
+                self.spark.createDataFrame(res["vio_rows"], schema=VIOLATIONS_DDL))
+
     def _record(
         self,
         chk: CompiledCheck,
@@ -2730,6 +2503,11 @@ class _ConfScope:
             else:
                 self.spark.conf.set(k, old)
         return False
+
+
+def _drift_prefix(chk: CompiledCheck) -> str:
+    """Alias prefix of a drift check's bucket counts in the metric rows."""
+    return f"__drift__{chk.key}"
 
 
 def _metrics_to_json(row: Optional[Dict[str, Any]], partition_col: str) -> str:

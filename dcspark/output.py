@@ -52,8 +52,7 @@ def exit_code(run: Run) -> int:
     OR warning run (the reference prints warnings and returns normally),
     exit 1 for everything else — INCLUDING unknown, which must fail CLOSED
     (a run that produced no verdict is not a green gate)."""
-    return 0 if run.result in (ResultEnum.passed, ResultEnum.warning,
-                               ResultEnum.info) else 1
+    return 0 if run.result in (ResultEnum.passed, ResultEnum.warning) else 1
 
 
 def to_junit_xml(run: Run) -> str:

@@ -1,6 +1,8 @@
 """End-to-end runs of the canonical audio contract: golden pass, corruption
 fixtures, per-partition results, checkpoint/resume identity."""
 
+import glob
+import os
 import shutil
 import tempfile
 
@@ -234,3 +236,73 @@ models:
     assert "shared_scan" in ph and "compute_phase_wall" in ph
     assert any(k.startswith("unique:") for k in ph)
     assert all(isinstance(v, float) and v >= 0 for v in ph.values())
+
+
+#: config name -> (ValidationConfig kwargs, matching `test` CLI flags)
+PLAN_MODES = {
+    "default": ({}, []),
+    "approx_unique": ({"unique_mode": "approx"}, ["--unique-mode", "approx"]),
+    "partition_ckpt": ({"partition_col": "bucket"}, ["--partition-col", "bucket"]),
+}
+CONTRACTS = sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "contracts", "*.yaml")))
+
+
+@pytest.fixture(scope="module")
+def orders_tables(spark):
+    import datetime as dt
+
+    now = dt.datetime.now()
+    orders = spark.createDataFrame(
+        [(i, i % 3, "PLACED", (10.0 * i, "EUR"), now) for i in range(1, 7)],
+        "order_id long, customer_id long, status string, "
+        "total struct<amount: double, currency: string>, placed_at timestamp")
+    customers = spark.createDataFrame(
+        [(i, f"c{i}@example.com") for i in range(3)], "customer_id long, email string")
+    return {"orders": orders, "customers": customers}
+
+
+def _dry_run_ids(capsys, contract, flags):
+    from dcspark.cli import main
+
+    assert main(["test", contract, "--dry-run", *flags]) == 0
+    ids, model = {}, None
+    for line in capsys.readouterr().out.splitlines():
+        if line.startswith("model "):
+            model = line.split()[1].rstrip(":")
+            ids[model] = set()
+        elif line.startswith("  job "):
+            ids[model].add(line.split()[1].rstrip(":"))
+    return ids
+
+
+@pytest.mark.parametrize("mode", sorted(PLAN_MODES))
+@pytest.mark.parametrize("contract", CONTRACTS, ids=os.path.basename)
+def test_executed_jobs_are_the_plan_and_the_dry_run(
+        spark, contract, mode, clean_tables, ref_stats, orders_tables, tmp_path, capsys):
+    """The jobs a run executes (its phase_timings labels), the jobs plan()
+    returns, and the jobs `test --dry-run` prints are one set, for every
+    shipped contract."""
+    from dcspark.compile import create_checks
+    from dcspark.plan import plan
+
+    spec = DataContractSpecification.from_file(contract)
+    audio = "audio_clips" in spec.models
+    tables = dict(clean_tables if audio else orders_tables)
+    snaps = ref_stats if audio else {}
+    kw, flags = PLAN_MODES[mode]
+    if "partition_col" in kw:
+        fact, key = ("audio_clips", "clip_id") if audio else ("orders", "order_id")
+        tables[fact] = tables[fact].withColumn(
+            "bucket", F.pmod(F.xxhash64(key), F.lit(4)).cast("string"))
+        kw = dict(kw, checkpoint_dir=str(tmp_path / "ckpt"), checkpoint_chunks=2)
+        flags = flags + ["--checkpoint-dir", str(tmp_path / "ckpt")]
+    cfg = ValidationConfig(ref_stats=snaps, **kw)
+
+    res = validate(spark, spec, tables, cfg)
+    executed = {m: set(ph) - {"compute_phase_wall"} for m, ph in res.phase_timings.items()}
+    planned = {m: {job.id for job in plan(m, checks, cfg, tables[m].schema, snaps)}
+               for m, checks in create_checks(spec).items()}
+    printed = _dry_run_ids(capsys, contract,
+                           flags + (["--ref-stats", str(tmp_path)] if snaps else []))
+    assert executed == planned == printed
+    assert any(i.startswith("shared_scan") for i in executed[next(iter(spec.models))])

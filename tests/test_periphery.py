@@ -916,11 +916,11 @@ def test_cli_test_dry_run(capsys):
 
 
 def test_cli_dry_run_shapes_track_engine_predicates(capsys, tmp_path):
-    """The dry-run's conditional job shapes derive from the engine's own
-    planning predicates (engine.plan_approx_unique / plan_fused_audio_fp),
-    not a hand-maintained table: --unique-mode approx moves the unique check
-    into the shared scan, and an fp-only contract (no co-running audio scan)
-    reports a DEDICATED fingerprint job instead of overstating fusion."""
+    """The dry-run's conditional job shapes come from the engine's own
+    planner (plan.plan), not a hand-maintained table: --unique-mode approx
+    moves the unique check into the shared scan, and an fp-only contract (no
+    co-running audio scan) reports a DEDICATED fingerprint job instead of
+    overstating fusion."""
     from dcspark.cli import main
 
     # approx mode: unique rides the shared scan as an HLL sketch
@@ -957,6 +957,26 @@ def test_cli_dry_run_shapes_track_engine_predicates(capsys, tmp_path):
     main(["test", "contracts/audio_clips.yaml", "--dry-run"])
     out = capsys.readouterr().out
     assert "fused audio decode pass" in out
+
+
+def test_cli_dry_run_drift_without_snapshot_is_an_error_not_a_job(capsys, tmp_path):
+    """Without --ref-stats the engine launches no drift job: the drift checks
+    record errors. The dry-run says so instead of promising a binned
+    aggregate; with --ref-stats the shared scan lists its drift pass."""
+    from dcspark.cli import main
+
+    main(["test", "contracts/audio_clips.yaml", "--dry-run"])
+    out = capsys.readouterr().out
+    assert "binned aggregate" not in out and "drift buckets" not in out
+    assert ("audio_clips__dur_ms__drift_ks  ERROR, no job: "
+            "no reference snapshot for column dur_ms") in out
+    assert "passes: agg, fused decode\n" in out
+
+    main(["test", "contracts/audio_clips.yaml", "--dry-run",
+          "--ref-stats", str(tmp_path)])
+    out = capsys.readouterr().out
+    assert "passes: agg, drift buckets, fused decode\n" in out
+    assert "ERROR" not in out
 
 
 def test_cli_profile_sweep_gangs_shuffle_light_modes(capsys):
@@ -1006,6 +1026,7 @@ def test_exit_code_reference_parity():
     assert exit_code(run_with(ResultEnum.failed)) == 1
     assert exit_code(run_with(ResultEnum.error)) == 1
     assert exit_code(run_with(ResultEnum.unknown)) == 1
+    assert exit_code(run_with(ResultEnum.info)) == 1
 
 
 def test_junit_xml_escapes_double_quotes():

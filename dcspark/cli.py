@@ -1926,6 +1926,14 @@ def main(argv: Optional[list] = None) -> int:
     d.add_argument("new")
 
     args = p.parse_args(argv)
+    if args.command == "test" and (args.checkpoint_dir or args.resume):
+        # fail closed: a checkpoint the engine cannot key by partition would
+        # be silently ignored, and --resume alone has nothing to resume from
+        if not args.partition_col:
+            t.error("--checkpoint-dir/--resume need --partition-col "
+                    "(the manifest records state per partition)")
+        if not args.checkpoint_dir:
+            t.error("--resume needs --checkpoint-dir")
     if args.command == "test":
         return cmd_test(args)
     if args.command == "iceberg":

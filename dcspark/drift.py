@@ -215,6 +215,17 @@ def drift_aliases(prefix: str, stats: dict, method: str) -> List[str]:
     return out
 
 
+#: the key NULL partition values are scanned under: unlike str(None) ==
+#: "None", no printable partition value equals it
+NULL_PARTITION = "\x00null"
+
+
+def partition_key(col: str) -> F.Column:
+    """The one expression that names a row's partition wherever per-partition
+    state is keyed: the value cast to string, NULL as NULL_PARTITION."""
+    return F.coalesce(F.col(col).cast("string"), F.lit(NULL_PARTITION))
+
+
 def drift_bucket_rows(
     df,
     checks: List[dict],
@@ -225,9 +236,9 @@ def drift_bucket_rows(
 
     Shuffle volume is bounded by |checks| * (grid+1) rows per input partition
     (map-side partial aggregation), independent of table size — the
-    10^12-row-safe shape. Returns {partition_id (str) or None: {alias: count}}
-    with aliases identical to the old per-grid-point aggregate columns, so
-    merge/checkpoint/statistic folding are unchanged.
+    10^12-row-safe shape. Returns {partition key (see partition_key) or None:
+    {alias: count}} with aliases identical to the old per-grid-point
+    aggregate columns, so merge/checkpoint/statistic folding are unchanged.
     """
     structs = []
     for chk in checks:
@@ -240,12 +251,9 @@ def drift_bucket_rows(
     sel = [F.explode(F.array(*structs)).alias("pb")]
     head: List[F.Column] = []
     if partition_col:
-        # coalesce NULL partition values to the string "None": the engine's
-        # merge looks partitions up by str(partition_value), so a Python-None
-        # key here would collide with the no-partition sentinel and those
-        # rows' drift counts would silently drop out of the global statistic
-        head = [F.coalesce(F.col(partition_col).cast("string"),
-                           F.lit("None")).alias("__part")]
+        # a NULL partition keys as NULL_PARTITION, never as Python None (the
+        # no-partition key) nor as "None" (a real string partition value)
+        head = [partition_key(partition_col).alias("__part")]
     ex = df.select(*(head + sel)).select(
         *(["__part"] if partition_col else []),
         F.col("pb.p").alias("p"), F.col("pb.b").alias("b"),

@@ -9,9 +9,10 @@ Execution plan per model (scale rationale in SURVEY.md §4):
    null-counts, invalid-counts (length/range/enum/regex/format/not-equal),
    row_count, freshness max / retention min timestamps, and the KS/PSI drift grid
    sums. Catalyst fuses these into a single Exchange + partial (map-side) aggregate;
-   with a partition column we run ``groupBy(partition_col)`` instead and merge
-   partition rows into the global metrics on the driver (all metrics are
-   decomposable: sum/min/max), which also powers checkpoint/resume.
+   with a partition column we group by its partition key instead and merge
+   per-partition states (ScanState) into the global metrics on the driver
+   (every metric is decomposable). Checkpoint/resume is the same loop over
+   chunks of partitions; a plain run is its one-chunk case.
 3. The audio decode-conformance pass (Arrow mapInPandas) aggregates its per-row
    flags through the same partitioned/mergeable path.
 4. Dedicated jobs that genuinely need their own shuffle: uniqueness (groupBy-key
@@ -31,10 +32,11 @@ worst-result-wins fold (/root/reference/datacontract/model/run.py:65-75).
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import math
 import os
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 from typing import Any, Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -88,6 +90,11 @@ class ValidationConfig:
     audio_oracle: Optional[audio_mod.OraclePcm] = None
     audio_snr_fn: Optional[audio_mod.SnrFn] = None  # blocked-SNR scale path (wins over oracle)
     now: Optional[dt.datetime] = None  # injectable clock for freshness/retention
+    # per-partition resume manifest (JSONL): needs partition_col — without
+    # one there is no partition to key its records by, and plan() says the
+    # directory is ignored. Resume re-probes each recorded partition's
+    # input-file lineage (file count + md5 of the sorted file list) and
+    # rescans partitions whose files changed instead of serving stale state.
     checkpoint_dir: Optional[str] = None
     resume: bool = False
     checkpoint_chunks: int = 4  # partition-groups per checkpointed scan
@@ -147,12 +154,6 @@ class ValidationConfig:
     # ad-hoc dataset filters per model (CLI --where): ANDed with the model's
     # contract-declared `filter:` when both are present
     model_where: Dict[str, str] = dc_field(default_factory=dict)
-    # resume-time lineage verification: each manifest record stores the
-    # partition's input-file lineage (file count + md5 of the sorted file
-    # list); on resume, a completed partition whose file set changed is
-    # invalidated and rescanned instead of silently serving stale metrics.
-    # The probe reads only the partition column (column-pruned scan).
-    checkpoint_verify_lineage: bool = True
 
 
 @dataclass
@@ -194,26 +195,148 @@ def _merge_values(op: str, a: Any, b: Any) -> Any:
         return a + b
     if op == "max":
         return max(a, b)
+    if op == "union":
+        # HLL sketch bytes: collected (order-free) and unioned where read
+        return sorted((a if isinstance(a, list) else [a])
+                      + (b if isinstance(b, list) else [b]))
     return min(a, b)
 
 
 def _merge_rows(rows: List[Dict[str, Any]], ops: Dict[str, str]) -> Dict[str, Any]:
+    """Fold metric rows alias by alias with each alias's merge op. A
+    "global" alias (a quantile sketch, not driver-mergeable) passes one
+    row's value through and is unknowable (None) once two rows carry it —
+    the engine then recomputes it in a dedicated column-pruned pass."""
     merged: Dict[str, Any] = {}
     for row in rows:
         for alias, op in ops.items():
-            if op == "global":
-                merged[alias] = row.get(alias)
+            if alias not in row:
                 continue
-            merged[alias] = _merge_values(op, merged.get(alias), row.get(alias))
-    if len(rows) > 1:
-        # "global" metrics (quantile sketches) are not driver-mergeable: a
-        # single row (flat run / one partition) passes through exactly; with
-        # >=2 partition rows the merged value is unknowable here and the
-        # engine recomputes it in a dedicated column-pruned pass
-        for alias, op in ops.items():
-            if op == "global":
+            if alias not in merged:
+                merged[alias] = row[alias]
+            elif op == "global":
                 merged[alias] = None
+            else:
+                merged[alias] = _merge_values(op, merged[alias], row[alias])
     return merged
+
+
+#: the shared scan's partition-key column (drift.partition_key of the
+#: configured partition column)
+PART = "__part"
+
+_AUDIO_ALIASES = [f"__audio__{c}" for c in audio_mod.COMPACT_COUNT_COLS]
+
+#: one capped violation-sample entry: (clip_id, observed, partition key)
+Sample = Tuple[str, str, Optional[str]]
+
+
+def _add_counts(a: Dict[Any, int], b: Dict[Any, int]) -> Dict[Any, int]:
+    return {k: (a.get(k) or 0) + (b.get(k) or 0) for k in {**a, **b}}
+
+
+def _recap(samples: List[Sample], cap: int) -> List[Sample]:
+    """The ``cap`` smallest entries by clip_id: the global top-cap is a
+    subset of the union of per-partition top-caps, so re-capping merged
+    samples equals capping all violations at once."""
+    return sorted(samples)[:cap]
+
+
+@dataclass
+class ScanState:
+    """The shared scan's state for one partition key (for the whole frame
+    on an unpartitioned run). Every field merges associatively and
+    commutatively (``merge``) and round-trips through one checkpoint
+    manifest record (``to_record`` / ``from_record``), so a plain run, a
+    checkpointed run and a resumed one fold the same states to the same
+    result."""
+
+    #: agg aliases, drift bucket counts and HLL sketch bytes (merge by ops)
+    metrics: Dict[str, Any] = dc_field(default_factory=dict)
+    #: decode-conformance counts, ``__audio__<count column>``
+    audio: Dict[str, int] = dc_field(default_factory=dict)
+    #: capped decode-conformance violation sample
+    audio_vio: List[Sample] = dc_field(default_factory=list)
+    #: loudness-drift histograms: feature -> bin -> clip count
+    fh: Dict[str, Dict[int, int]] = dc_field(default_factory=dict)
+    #: signal-quality out-of-range counts / capped samples by rule index
+    fq: Dict[int, int] = dc_field(default_factory=dict)
+    fv: Dict[int, List[Sample]] = dc_field(default_factory=dict)
+    #: t-digests by percentile column; merged states list one per
+    #: partition, compressed once where the quantile is read
+    digests: Dict[str, List[td_mod.TDigest]] = dc_field(default_factory=dict)
+    #: input-file lineage of a manifest-recorded partition (never merged)
+    lineage: Optional[Dict[str, Any]] = None
+
+    def merge(self, other: "ScanState", ops: Dict[str, str], cap: int) -> "ScanState":
+        return ScanState(
+            metrics=_merge_rows([self.metrics, other.metrics], ops),
+            audio=_add_counts(self.audio, other.audio),
+            audio_vio=_recap(self.audio_vio + other.audio_vio, cap),
+            fh={f: _add_counts(self.fh.get(f, {}), other.fh.get(f, {}))
+                for f in {**self.fh, **other.fh}},
+            fq=_add_counts(self.fq, other.fq),
+            fv={li: _recap(self.fv.get(li, []) + other.fv.get(li, []), cap)
+                for li in {**self.fv, **other.fv}},
+            digests={c: self.digests.get(c, []) + other.digests.get(c, [])
+                     for c in {**self.digests, **other.digests}},
+        )
+
+    def to_record(self) -> Dict[str, Any]:
+        """This partition's manifest-record fields (JSON-ready)."""
+        return {
+            "metrics_json": _metrics_to_json(self.metrics),
+            "audio_metrics_json": _metrics_to_json(self.audio) if self.audio else None,
+            "audio_violations": [[c, o] for c, o, _ in self.audio_vio] or None,
+            "audio_feature_hists": {
+                f: {str(b): n for b, n in bins.items()}
+                for f, bins in self.fh.items()} or None,
+            "audio_quality": {
+                "counts": {str(li): n for li, n in self.fq.items()},
+                "violations": {str(li): [[c, o] for c, o, _ in v]
+                               for li, v in self.fv.items()},
+            } if self.fq or self.fv else None,
+            "pctl_digests": {
+                c: ds[0].to_b64()  # a recorded state is one partition's
+                for c, ds in self.digests.items()} or None,
+            "lineage": self.lineage,
+        }
+
+    @classmethod
+    def from_record(cls, rec: Dict[str, Any]) -> "ScanState":
+        pid = str(rec["partition_id"])
+        aq = rec.get("audio_quality") or {}
+        return cls(
+            metrics=_json_to_metrics(rec["metrics_json"]),
+            audio=(_json_to_metrics(rec["audio_metrics_json"])
+                   if rec.get("audio_metrics_json") else {}),
+            audio_vio=[(c, o, pid) for c, o in rec.get("audio_violations") or []],
+            fh={f: {int(b): int(n) for b, n in bins.items()}
+                for f, bins in (rec.get("audio_feature_hists") or {}).items()},
+            fq={int(li): int(n) for li, n in (aq.get("counts") or {}).items()},
+            fv={int(li): [(c, o, pid) for c, o in v]
+                for li, v in (aq.get("violations") or {}).items()},
+            digests={c: [td_mod.TDigest.from_b64(b)]
+                     for c, b in (rec.get("pctl_digests") or {}).items()},
+            lineage=rec.get("lineage"),
+        )
+
+
+@dataclass
+class _ScanSpec:
+    """What every chunk of one model's shared scan computes."""
+
+    exprs: Dict[str, Column]         # metric agg alias -> aggregate
+    ops: Dict[str, str]              # merge op per metric alias
+    drift_jobs: List[dict]           # drift_mod.drift_bucket_rows specs
+    partition_col: Optional[str]     # None: unpartitioned (one state)
+    decode: bool                     # run the fused audio decode pass
+    audio_chk: Optional[CompiledCheck]
+    fp_checks: List[CompiledCheck]   # fingerprint checks fused into decode
+    feat_bins: Dict[str, List[float]]
+    feat_limits: List[Tuple[str, Optional[float], Optional[float]]]
+    rate_text_col: Optional[str]
+    pctl_cols: List[str]             # t-digest columns (pctl_mode sketch)
 
 
 def _default_fs_is_local() -> bool:
@@ -635,28 +758,11 @@ class Validator:
                 ops[alias] = "sum"
         return exprs, ops, drift_jobs
 
-    @staticmethod
-    def _merge_drift_rows(
-        part_rows: List[Dict[str, Any]],
-        drift_rows: Dict[Optional[str], Dict[str, int]],
-        drift_jobs: List[dict],
-        partition_col: Optional[str],
-    ) -> None:
-        zero: Dict[str, int] = {}
-        for job in drift_jobs:
-            for alias in drift_mod.drift_aliases(job["prefix"], job["stats"], job["method"]):
-                zero[alias] = 0
-        if partition_col:
-            for prow in part_rows:
-                prow.update(drift_rows.get(str(prow.get(partition_col)), zero))
-        elif part_rows:
-            part_rows[0].update(drift_rows.get(None, zero))
-
     def _audio_compact(
         self, df: DataFrame, chk: Optional[CompiledCheck], partition_col: Optional[str],
         fp_fn=None, feat_bins=None, feat_limits=None, text_col=None,
     ) -> DataFrame:
-        # partition col is threaded through the Arrow batch as __part (no
+        # the partition key is threaded through the Arrow batch as __part (no
         # re-join); chk=None (feature-histograms-only scan) skips the SNR
         # oracle — header conformance counts still accumulate but go unread
         return audio_mod.audio_decode_compact(
@@ -664,115 +770,13 @@ class Validator:
             snr_floor_db=chk.params.get("snr_db", 30.0) if chk is not None else 30.0,
             oracle=self.config.audio_oracle if chk is not None else None,
             snr_fn=self.config.audio_snr_fn if chk is not None else None,
-            partition_col=partition_col if (partition_col and partition_col in df.columns) else None,
+            partition_col=partition_col,
             violation_cap=self.config.violation_cap if (chk is not None or feat_limits) else 0,
             fp_fn=fp_fn,
             feat_bins=feat_bins,
             feat_limits=feat_limits,
             text_col=text_col,
         )
-
-    def _audio_compact_collect(
-        self, compact: DataFrame, partition_col: Optional[str],
-        own_cache: bool = True,
-    ) -> Tuple[List[Dict[str, Any]], List[Tuple[Optional[str], str, str]]]:
-        """(per-partition count rows, capped violation tuples) from ONE decode.
-
-        The compact frame is tiny by construction (bounded by tasks x
-        (parts_per_task + cap)); persisting it means the first action runs the
-        single decode scan and the second reads the cache — never a second
-        decode (VERDICT.md defect #1). MEMORY_AND_DISK so cache pressure spills
-        instead of recomputing. ``own_cache=False`` when the caller already
-        persisted the frame and has more consumers (fused fingerprint path) —
-        unpersisting here would silently evict the caller's cache and re-run
-        the decode.
-        """
-        from pyspark import StorageLevel
-
-        if own_cache:
-            compact = compact.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            sums = [F.sum(c).alias(f"__audio__{c}") for c in audio_mod.COMPACT_COUNT_COLS]
-            aggd = compact.filter(F.col("row_type") == "agg")
-            if partition_col:
-                rows = [r.asDict() for r in aggd.groupBy("__part").agg(*sums).collect()]
-            else:
-                rows = [aggd.agg(*sums).first().asDict()]
-                rows[0]["__part"] = None
-            total_vio = sum(r.get("__audio__violations") or 0 for r in rows)
-            vio: List[Tuple[Optional[str], str, str]] = []
-            if total_vio:
-                vio = [
-                    (r["__part"], r["clip_id"], r["observed"])
-                    for r in (
-                        compact.filter(F.col("row_type") == "vio")
-                        .orderBy("clip_id")
-                        .limit(self.config.violation_cap)
-                        .select("__part", "clip_id", "observed")
-                        .collect()
-                    )
-                ]
-            return rows, vio
-        finally:
-            if own_cache:
-                compact.unpersist()
-
-    @staticmethod
-    def _fq_count_frame(compact: DataFrame) -> DataFrame:
-        """Per-(partition, rule) out-of-range counts from 'fq' compact rows."""
-        return (compact.filter(F.col("row_type") == "fq")
-                .groupBy("__part", "t").agg(F.sum("hash").alias("c")))
-
-    def _fv_capped_frame(self, compact: DataFrame, per_partition: bool) -> DataFrame:
-        """Capped 'fv' violation samples, deterministic by clip_id; the cap
-        applies per rule (globally) or per (partition, rule) for the
-        checkpoint manifest. Shared by the flat and checkpointed paths so the
-        compact 'fq'/'fv' row shape has one decoder."""
-        keys = ["__part", "t"] if per_partition else ["t"]
-        w = Window.partitionBy(*keys).orderBy("clip_id")
-        return (compact.filter(F.col("row_type") == "fv")
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= self.config.violation_cap)
-                .select("__part", "t", "clip_id", "observed"))
-
-    def _audio_quality_collect(
-        self, compact: DataFrame,
-    ) -> Tuple[List[Dict[str, Any]], List[Dict[str, Any]]]:
-        """(per-partition out-of-range count rows, capped violation rows) from
-        the compact frame's 'fq'/'fv' rows — signal-quality bounds evaluated in
-        the same single decode pass as everything else. ``t`` is the rule index
-        (position in the audio_quality_checks list), so several bounds on the
-        same or different features stay separable. Violations are re-capped
-        per rule (per-task caps can sum past violation_cap)."""
-        fq_rows = [
-            {"__part": r["__part"], "t": r["t"], "c": int(r["c"])}
-            for r in self._fq_count_frame(compact).collect()
-        ]
-        fv_rows: List[Dict[str, Any]] = []
-        if any(r["c"] > 0 for r in fq_rows):
-            fv_rows = [
-                r.asDict()
-                for r in self._fv_capped_frame(compact, per_partition=False)
-                .collect()
-            ]
-        return fq_rows, fv_rows
-
-    def _audio_hist_collect(self, compact: DataFrame) -> Dict[str, Dict[int, int]]:
-        """{feature: {bin: count}} from the compact frame's 'fh' rows — a
-        groupBy over a frame bounded by tasks x features x bins, never the
-        corpus. Loudness drift is evaluated globally (like the column drift
-        checks), so __part sums away here."""
-        rows = (
-            compact.filter(F.col("row_type") == "fh")
-            .groupBy("clip_id", "t").agg(F.sum("hash").alias("c"))
-            .collect()
-        )
-        out: Dict[str, Dict[int, int]] = {}
-        for r in rows:
-            out.setdefault(r["clip_id"], {})[r["t"]] = r["c"]
-        return out
-
-    _AUDIO_OPS = {f"__audio__{c}": "sum" for c in audio_mod.COMPACT_COUNT_COLS}
 
     @staticmethod
     def _reroute_bytes_aliases(
@@ -812,13 +816,13 @@ class Validator:
 
     def _run_shared_scan(self, model_name: str, df: DataFrame,
                          job: plan_mod.PlannedJob) -> None:
-        """Run the planned shared scan's sub-passes (``job.passes``) and record
+        """Run the planned shared scan (``job.passes``) as one loop over
+        chunks (_scan_states), fold the per-partition states and record
         every check that rides it."""
         agg_checks = job.of(*plan_mod.AGG_KINDS)
         drift_checks = job.of("drift")
         audio_checks = job.of("audio")
         approx_unique = job.of("unique")
-        audio_fp_checks = job.of("audio_fp")
         audio_quality_checks = job.of("audio_quality")
         exprs, ops, drift_jobs = self._shared_agg_specs(
             model_name, agg_checks, drift_checks, job.snapshots)
@@ -828,15 +832,13 @@ class Validator:
             exprs[nn_alias] = F.coalesce(
                 F.sum(F.when(F.col(col).isNotNull(), 1).otherwise(0)), F.lit(0))
             ops[nn_alias] = "sum"
-            # the sketch merges by HLL union, not sum/min/max — evaluated by
-            # _record_approx_unique after the scan, never by _merge_rows
+            # per-partition sketches are unioned where they are read
+            # (_record_approx_unique), never summed
             exprs[sk_alias] = F.hll_sketch_agg(F.col(col), F.lit(self.config.unique_hll_lgk))
-        partition_col = self.config.partition_col if (
-            self.config.partition_col and self.config.partition_col in df.columns
-        ) else None
+            ops[sk_alias] = "union"
+        partition_col = self._partition_col(df)
 
         audio_chk = audio_checks[0] if audio_checks else None
-        audio_ops: Dict[str, str] = dict(self._AUDIO_OPS) if audio_chk is not None else {}
         rerouted_aliases: List[str] = []
         if audio_chk is not None:
             rerouted_aliases = self._reroute_bytes_aliases(agg_checks, exprs, ops)
@@ -854,12 +856,6 @@ class Validator:
             feat_bins[chk.params["feature"]] = [float(x) for x in stats["bin_edges"]]
             audio_drift_eval.append((chk, stats))
 
-        # signal-quality: per-clip decoded-feature bounds, also evaluated
-        # inside the one decode pass ('fq' count + capped 'fv' violation rows)
-        feat_limits: List[Tuple[str, Optional[float], Optional[float]]] = [
-            (c.params["feature"], c.params["minimum"], c.params["maximum"])
-            for c in audio_quality_checks
-        ]
         # speaking-rate rules carry the transcript column the decode scan
         # must add as a JVM length; one text column per model
         rate_cols = {c.params["text_column"]
@@ -869,29 +865,16 @@ class Validator:
             raise ValueError(
                 f"speaking-rate rules on one model must share a text "
                 f"column, got {sorted(rate_cols)}")
-        rate_text_col = next(iter(rate_cols), None)
 
-        part_rows: List[Dict[str, Any]] = []
-        audio_part_rows: List[Dict[str, Any]] = []
-        audio_vio: List[Tuple[Optional[str], str, str]] = []
-        fused_fp_results: List[Tuple[CompiledCheck, dict]] = []
         # quantile-sketch aliases (merge op "global"): per-partition values are
         # exact per partition, but the global value cannot be merged on the
         # driver — recompute it in ONE dedicated pass pruned to just the
-        # percentile columns (overlapped with the main scan when parallel)
+        # percentile columns (overlapped with the scan loop)
         pctl_aliases = [a for a, op in ops.items() if op == "global"]
-        pctl_row: Optional[Dict[str, Any]] = None
-
-        def pctl_job() -> Dict[str, Any]:
-            return df.agg(
-                *[exprs[a].alias(a) for a in pctl_aliases]
-            ).first().asDict()
-
         # sketch mode: swap the GK aggregates for mergeable t-digests — the
         # aliases leave the shared agg entirely and their values are injected
         # into the metric rows from driver-merged digests after the scan
         pctl_specs: Dict[str, Tuple[str, float]] = {}
-        pctl_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
         if "t-digest" in job.passes:
             for chk in agg_checks:
                 if chk.agg_alias in pctl_aliases and chk.agg_alias not in pctl_specs:
@@ -907,160 +890,55 @@ class Validator:
                 exprs.pop(alias, None)
                 ops.pop(alias, None)
             pctl_aliases = [a for a in pctl_aliases if a not in pctl_specs]
-        pctl_cols = sorted({c for c, _ in pctl_specs.values()})
 
-        audio_fhists: Dict[str, Dict[int, int]] = {}
-        audio_fq_rows: List[Dict[str, Any]] = []
-        audio_fv_rows: List[Dict[str, Any]] = []
+        spec = _ScanSpec(
+            exprs=exprs, ops=ops, drift_jobs=drift_jobs,
+            partition_col=partition_col,
+            decode="fused decode" in job.passes, audio_chk=audio_chk,
+            fp_checks=job.of("audio_fp"), feat_bins=feat_bins,
+            # signal-quality: per-clip decoded-feature bounds, also evaluated
+            # inside the one decode pass ('fq' count + capped 'fv' rows)
+            feat_limits=[(c.params["feature"], c.params["minimum"], c.params["maximum"])
+                         for c in audio_quality_checks],
+            rate_text_col=next(iter(rate_cols), None),
+            pctl_cols=sorted({c for c, _ in pctl_specs.values()}))
+        fused_fp: List[Tuple[CompiledCheck, dict]] = []
+        thunks: List[Any] = [lambda: self._scan_states(model_name, df, spec, fused_fp)]
+        if "percentile global" in job.passes:
+            thunks.append(lambda: df.agg(
+                *[exprs[a].alias(a) for a in pctl_aliases]).first().asDict())
+        states, *pctl_rows = self._parallel(thunks)
 
-        if partition_col and self.config.checkpoint_dir:
-            (part_rows, audio_part_rows, audio_vio, audio_fhists,
-             audio_fq_rows, audio_fv_rows, pctl_digests) = self._checkpointed_scan(
-                model_name, df, exprs, ops, audio_chk, partition_col,
-                drift_jobs, feat_bins=feat_bins or None,
-                feat_limits=feat_limits or None,
-                pctl_cols=pctl_cols or None,
-                rate_text_col=rate_text_col,
-            )
-            if "percentile global" in job.passes and len(part_rows) > 1:
-                pctl_row = pctl_job()
-        else:
-            agg_list = [v.alias(k) for k, v in exprs.items()]
-
-            def main_job() -> List[Dict[str, Any]]:
-                if partition_col:
-                    return [r.asDict() for r in df.groupBy(partition_col).agg(*agg_list).collect()]
-                return [df.agg(*agg_list).first().asDict()]
-
-            def drift_job():
-                return drift_mod.drift_bucket_rows(df, drift_jobs, partition_col)
-
-            def audio_job() -> Tuple[Any, Any, Any, Any, Any, Any]:
-                if not audio_fp_checks and not feat_bins and not feat_limits:
-                    compact = self._audio_compact(df, audio_chk, partition_col)
-                    rows, vio = self._audio_compact_collect(compact, partition_col)
-                    return rows, vio, [], {}, [], []
-                # fused: fingerprints and/or feature histograms ride along in
-                # the same decode pass; the compact frame (counts + capped
-                # vios + fp/fh rows, far smaller than the payload) is
-                # persisted once and feeds every consumer
-                from pyspark import StorageLevel
-
-                from . import audiofp as afp
-
-                compact = self._audio_compact(
-                    df, audio_chk, partition_col,
-                    fp_fn=afp.fingerprint_hashes if audio_fp_checks else None,
-                    feat_bins=feat_bins or None,
-                    feat_limits=feat_limits or None,
-                    text_col=rate_text_col,
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    rows, vio = (
-                        self._audio_compact_collect(compact, partition_col, own_cache=False)
-                        if audio_chk is not None else ([], []))
-                    fp_results = []
-                    if audio_fp_checks:
-                        from .pipeline_ckpt import release_caches
-
-                        fp = compact.filter(F.col("row_type") == "fp").select("clip_id", "hash")
-                        for chk in audio_fp_checks:
-                            nd = afp.audio_fingerprint_near_dup(
-                                fp, threshold=float(chk.params["score_threshold"]))
-                            try:
-                                fp_results.append(
-                                    (chk, self._audio_fp_result(nd, chk)))
-                            finally:
-                                # the operator persists its internal hash
-                                # frame; release per check or repeated runs
-                                # on one session leak cached blocks
-                                release_caches(nd)
-                    fhists = self._audio_hist_collect(compact) if feat_bins else {}
-                    fq_rows, fv_rows = (
-                        self._audio_quality_collect(compact)
-                        if feat_limits else ([], []))
-                finally:
-                    compact.unpersist()
-                # recorded after the merge section (fixed order, main thread)
-                return rows, vio, fp_results, fhists, fq_rows, fv_rows
-
-            # the scan's three independent jobs (metric agg / drift buckets /
-            # audio decode) overlap on the cluster — decode dominates, the
-            # small aggs ride along on spare slots
-            thunks: List[Any] = [main_job]
-            if drift_jobs:
-                thunks.append(drift_job)
-            run_audio = "fused decode" in job.passes
-            if run_audio:
-                thunks.append(audio_job)
-            run_pctl = "percentile global" in job.passes
-            if run_pctl:
-                thunks.append(pctl_job)
-
-            def sketch_job() -> Dict[Tuple[str, str], td_mod.TDigest]:
-                return td_mod.collect_digests(
-                    df, pctl_cols, partition_col, self.config.pctl_tdigest_delta)
-
-            if pctl_specs:
-                thunks.append(sketch_job)
-            with self._arrow_batch_conf():
-                outs = self._parallel(thunks)
-            part_rows = outs[0]
-            idx = 1
-            if drift_jobs:
-                self._merge_drift_rows(part_rows, outs[idx], drift_jobs, partition_col)
-                idx += 1
-            if run_audio:
-                (audio_part_rows, audio_vio, fused_fp_results, audio_fhists,
-                 audio_fq_rows, audio_fv_rows) = outs[idx]
-                idx += 1
-            if run_pctl:
-                pctl_row = outs[idx]
-                idx += 1
-            if pctl_specs:
-                pctl_digests = outs[idx]
-
-        global_row = _merge_rows(part_rows, ops)
-        if pctl_row is not None:
-            for alias in pctl_aliases:
-                global_row[alias] = pctl_row.get(alias)
-        if pctl_specs:
-            # driver-side digest merge (sorted key order -> deterministic,
-            # resume-identical); values injected into the metric rows so
-            # recording is byte-for-byte the exact-mode code path
-            for alias, (col, frac) in pctl_specs.items():
-                col_keys = sorted(k for k in pctl_digests if k[1] == col)
-                merged = td_mod.TDigest.merge(
-                    [pctl_digests[k] for k in col_keys],
-                    self.config.pctl_tdigest_delta)
-                global_row[alias] = (
-                    merged.quantile(frac) if merged.total_weight else None)
-                if partition_col:
-                    for prow in part_rows:
-                        d = pctl_digests.get((str(prow.get(partition_col)), col))
-                        prow[alias] = (
-                            d.quantile(frac)
-                            if d is not None and d.total_weight else None)
+        # fold in partition-key order: deterministic, so a resumed run folds
+        # exactly what a full run folds
+        ordered = [(k, states[k]) for k in sorted(states)]
+        parts = ordered if partition_col else []
+        merged = functools.reduce(
+            lambda a, b: a.merge(b, ops, self.config.violation_cap),
+            (s for _, s in ordered), ScanState())
+        global_row = merged.metrics
+        for row in pctl_rows:
+            global_row.update(row)
+        for alias, (col, frac) in pctl_specs.items():
+            digest = td_mod.TDigest.merge(
+                merged.digests.get(col, []), self.config.pctl_tdigest_delta)
+            global_row[alias] = digest.quantile(frac) if digest.total_weight else None
+            for _, st in parts:
+                d = st.digests.get(col, [None])[0]
+                st.metrics[alias] = (
+                    d.quantile(frac) if d is not None and d.total_weight else None)
         global_row["__total_count"] = global_row.get("__total_count") or 0
-        audio_global = _merge_rows(audio_part_rows, audio_ops) if audio_part_rows else {}
-        if audio_chk is not None:
-            # empty input (or an empty partition) -> zero counts, exactly as the
-            # JVM aggregate's coalesce(sum(..), 0) would report
-            for alias in audio_ops:
-                if audio_global.get(alias) is None:
-                    audio_global[alias] = 0
+        # empty input (or an empty partition) -> zero counts, exactly as the
+        # JVM aggregate's coalesce(sum(..), 0) would report
+        audio_global = ({a: merged.audio.get(a) or 0 for a in _AUDIO_ALIASES}
+                        if audio_chk is not None else {})
 
-        if rerouted_aliases:
-            # fold the audio pass's bytes-null count back into the metric rows
-            # so the required-check evaluates exactly as if it had run JVM-side
-            bytes_null = audio_global.get("__audio__bytes_null") or 0
-            by_part = {str(r.get("__part")): r for r in audio_part_rows}
-            for alias in rerouted_aliases:
-                global_row[alias] = bytes_null
-                if partition_col:
-                    for prow in part_rows:
-                        arow = by_part.get(str(prow.get(partition_col)))
-                        prow[alias] = 0 if arow is None else (arow.get("__audio__bytes_null") or 0)
+        # fold the audio pass's bytes-null count back into the metric rows so
+        # the required-check evaluates exactly as if it had run JVM-side
+        for alias in rerouted_aliases:
+            global_row[alias] = audio_global["__audio__bytes_null"]
+            for _, st in parts:
+                st.metrics[alias] = st.audio.get("__audio__bytes_null") or 0
 
         # evaluate + record each agg check (global + per-partition rows)
         failed_agg: List[CompiledCheck] = []
@@ -1068,19 +946,16 @@ class Validator:
             metric = self._agg_metric(chk, global_row)
             result, reason = chk.eval_metric(metric, global_row)
             self._record(chk, metric, result, reason, global_row.get("__total_count"))
-            if partition_col:
-                for prow in part_rows:
-                    pm = self._agg_metric(chk, prow)
-                    pres, preason = chk.eval_metric(pm, prow)
-                    self._record(
-                        chk, pm, pres, preason, prow.get("__total_count"),
-                        partition_id=str(prow.get(partition_col)),
-                    )
+            for pid, st in parts:
+                pm = self._agg_metric(chk, st.metrics)
+                pres, preason = chk.eval_metric(pm, st.metrics)
+                self._record(chk, pm, pres, preason, st.metrics.get("__total_count"),
+                             partition_id=pid)
             if result == ResultEnum.failed and chk.violation_predicate is not None:
                 failed_agg.append(chk)
 
         for chk in approx_unique:
-            self._record_approx_unique(chk, part_rows, global_row, partition_col)
+            self._record_approx_unique(chk, ordered, global_row, bool(partition_col))
 
         for chk in drift_checks:
             if chk.key in job.errors:
@@ -1093,7 +968,7 @@ class Validator:
             self._record(chk, stat, result, reason, global_row.get("__total_count"))
 
         if audio_chk is not None:
-            metric = float(audio_global.get("__audio__violations") or 0)
+            metric = float(audio_global["__audio__violations"])
             diag = {k.replace("__audio__", ""): v for k, v in audio_global.items()}
             result = ResultEnum.passed if metric == 0 else ResultEnum.failed
             reason = None if metric == 0 else (
@@ -1102,71 +977,212 @@ class Validator:
                 f"dur={diag.get('dur_bad')}, codec={diag.get('codec_bad')}, snr={diag.get('snr_bad')})"
             )
             self._record(audio_chk, metric, result, reason,
-                         audio_global.get("__audio__rows"), diagnostics=diag)
-            if partition_col:
-                for prow in audio_part_rows:
-                    pm = float(prow.get("__audio__violations") or 0)
-                    self._record(
-                        audio_chk, pm,
-                        ResultEnum.passed if pm == 0 else ResultEnum.failed,
-                        None if pm == 0 else f"{int(pm)} decode-conformance violations",
-                        prow.get("__audio__rows"), partition_id=str(prow.get("__part")),
-                    )
-            if audio_vio:
-                # capped violation rows came out of the SAME decode pass as the
-                # metrics (compact frame) — never a second scan of the payload
-                vio_rows = [
-                    (self.run.runId, part, audio_chk.key, clip_id, observed, audio_chk.expected)
-                    for part, clip_id, observed in audio_vio[: self.config.violation_cap]
-                ]
-                self._violation_frames.append(
-                    self.spark.createDataFrame(vio_rows, schema=VIOLATIONS_DDL))
+                         audio_global["__audio__rows"], diagnostics=diag)
+            for pid, st in parts:
+                pm = float(st.audio.get("__audio__violations") or 0)
+                self._record(
+                    audio_chk, pm,
+                    ResultEnum.passed if pm == 0 else ResultEnum.failed,
+                    None if pm == 0 else f"{int(pm)} decode-conformance violations",
+                    st.audio.get("__audio__rows"), partition_id=pid,
+                )
+            # capped violation rows came out of the SAME decode pass as the
+            # metrics (compact frame) — never a second scan of the payload
+            self._append_samples(audio_chk, merged.audio_vio)
 
-        for chk, res in fused_fp_results:
+        for chk, res in fused_fp:
             self._record_result(chk, res)
 
         for chk, stats in audio_drift_eval:
-            got = audio_fhists.get(chk.params["feature"], {})
+            got = merged.fh.get(chk.params["feature"], {})
             counts = [got.get(k, 0) for k in range(len(stats["bin_edges"]) + 1)]
             stat = drift_mod.drift_statistic_from_counts(
                 counts, stats, chk.params["method"])
             result, reason = chk.eval_metric(stat, {})
             self._record(chk, stat, result, reason, sum(counts))
 
-        if audio_quality_checks:
-            # out-of-range clip counts from the same decode pass ('fq' rows);
-            # per-rule index rides in 't'. Absent rows mean zero violations.
-            fq_global: Dict[int, int] = {}
-            fq_by_part: Dict[Tuple[int, str], int] = {}
-            for r in audio_fq_rows:
-                li = int(r["t"])
-                fq_global[li] = fq_global.get(li, 0) + int(r["c"])
-                fq_by_part[(li, str(r["__part"]))] = (
-                    fq_by_part.get((li, str(r["__part"])), 0) + int(r["c"]))
-            total = (audio_global.get("__audio__rows")
-                     if audio_chk is not None else global_row.get("__total_count"))
-            for li, chk in enumerate(audio_quality_checks):
-                metric = float(fq_global.get(li, 0))
-                result, reason = chk.eval_metric(metric, {})
-                self._record(chk, metric, result, reason, total)
-                if partition_col:
-                    for prow in part_rows:
-                        pid = str(prow.get(partition_col))
-                        pm = float(fq_by_part.get((li, pid), 0))
-                        pres, preason = chk.eval_metric(pm, {})
-                        self._record(chk, pm, pres, preason,
-                                     prow.get("__total_count"), partition_id=pid)
-                vio_rows = [
-                    (self.run.runId, r["__part"], chk.key, r["clip_id"],
-                     r["observed"], chk.expected)
-                    for r in audio_fv_rows if int(r["t"]) == li
-                ][: self.config.violation_cap]
-                if vio_rows:
-                    self._violation_frames.append(
-                        self.spark.createDataFrame(vio_rows, schema=VIOLATIONS_DDL))
+        # out-of-range clip counts from the same decode pass ('fq' rows), by
+        # rule index; absent counts mean zero violations
+        total = (audio_global["__audio__rows"]
+                 if audio_chk is not None else global_row["__total_count"])
+        for li, chk in enumerate(audio_quality_checks):
+            metric = float(merged.fq.get(li, 0))
+            result, reason = chk.eval_metric(metric, {})
+            self._record(chk, metric, result, reason, total)
+            for pid, st in parts:
+                pm = float(st.fq.get(li, 0))
+                pres, preason = chk.eval_metric(pm, {})
+                self._record(chk, pm, pres, preason,
+                             st.metrics.get("__total_count"), partition_id=pid)
+            self._append_samples(chk, merged.fv.get(li, []))
 
         if failed_agg:
             self._collect_agg_violations(model_name, df, failed_agg, partition_col)
+
+    def _append_samples(self, chk: CompiledCheck, samples: List[Sample]) -> None:
+        """Violation rows for a capped (clip_id, observed, partition) sample."""
+        if samples:
+            self._violation_frames.append(self.spark.createDataFrame(
+                [(self.run.runId, part, chk.key, clip_id, observed, chk.expected)
+                 for clip_id, observed, part in samples],
+                schema=VIOLATIONS_DDL))
+
+    def _scan_states(self, model_name: str, df: DataFrame, spec: _ScanSpec,
+                     fused_fp: List[Tuple[CompiledCheck, dict]],
+                     ) -> Dict[Optional[str], ScanState]:
+        """The scan loop: {partition key: ScanState} over every chunk (key
+        None on an unpartitioned run).
+
+        Without a checkpoint_dir the one chunk is the whole frame and the
+        manifest stays in memory: no partition listing, filter, lineage probe
+        or file write. With one (and a partition column), the chunks are the
+        manifest's todo partition groups, and each chunk's states append to
+        the JSONL manifest as the chunk completes; completed partitions come
+        back from it on resume.
+        """
+        keyed = (df.withColumn(PART, drift_mod.partition_key(spec.partition_col))
+                 if spec.partition_col else df)
+        manifest = (self._manifest_path(model_name)
+                    if spec.partition_col and self.config.checkpoint_dir else None)
+        states: Dict[Optional[str], ScanState] = {}
+        chunks = [keyed]
+        if manifest:
+            sig = self._state_sig(model_name, spec)
+            states, groups = self._manifest_todo(keyed, manifest, sig)
+            chunks = [keyed.filter(F.col(PART).isin(g)) for g in groups]
+        for frame in chunks:
+            got = self._scan_chunk(frame, spec, fused_fp, lineage=bool(manifest))
+            if manifest:
+                self._append_records(manifest, got, sig)
+            states.update(got)
+        return states
+
+    def _scan_chunk(self, frame: DataFrame, spec: _ScanSpec,
+                    fused_fp: List[Tuple[CompiledCheck, dict]],
+                    lineage: bool = False) -> Dict[Optional[str], ScanState]:
+        """Scan one chunk: the metric agg, drift buckets, fused decode and
+        t-digest sub-passes (plus the lineage probe when a file manifest
+        records the chunk) overlap on the cluster — decode dominates, the
+        small aggs ride along on spare slots — and fold into one ScanState
+        per partition key."""
+        part = PART if spec.partition_col else None
+        aggs = [v.alias(k) for k, v in spec.exprs.items()]
+        passes: Dict[str, Any] = {"agg": lambda: (
+            frame.groupBy(PART).agg(*aggs).collect() if part
+            else [frame.agg(*aggs).first()])}
+        if spec.drift_jobs:
+            passes["drift"] = lambda: drift_mod.drift_bucket_rows(
+                frame, spec.drift_jobs, part)
+        if spec.decode:
+            passes["decode"] = lambda: self._decode_states(frame, spec, fused_fp)
+        if spec.pctl_cols:
+            passes["digests"] = lambda: td_mod.collect_digests(
+                frame, spec.pctl_cols, part, self.config.pctl_tdigest_delta)
+        if lineage:
+            passes["lineage"] = lambda: self._partition_lineage(frame, PART)
+        with self._arrow_batch_conf():
+            out = dict(zip(passes, self._parallel(list(passes.values()))))
+
+        zero = {a: 0 for j in spec.drift_jobs
+                for a in drift_mod.drift_aliases(j["prefix"], j["stats"], j["method"])}
+        states: Dict[Optional[str], ScanState] = {}
+        for r in out["agg"]:
+            key = r[PART] if part else None
+            metrics = {a: r[a] for a in spec.exprs}
+            if spec.drift_jobs:
+                metrics.update(out["drift"].get(key, zero))
+            st = states[key] = replace(
+                out.get("decode", {}).get(key) or ScanState(), metrics=metrics)
+            for col in spec.pctl_cols:
+                d = out["digests"].get((key if part else "", col))
+                if d is not None:
+                    st.digests[col] = [d]
+            if lineage:
+                st.lineage = out["lineage"].get(key)
+        return states
+
+    def _decode_states(self, frame: DataFrame, spec: _ScanSpec,
+                       fused_fp: List[Tuple[CompiledCheck, dict]],
+                       ) -> Dict[Optional[str], ScanState]:
+        """The fused decode pass, per partition key: decode-conformance
+        counts and capped samples, feature histograms, signal-quality counts
+        and capped samples. ONE payload decode (_audio_compact); its compact
+        frame (far smaller than the payload) is persisted once and read by
+        every consumer, fused fingerprint checks included (their results
+        append to ``fused_fp``)."""
+        from pyspark import StorageLevel
+
+        from . import audiofp as afp
+        from .pipeline_ckpt import release_caches
+
+        compact = self._audio_compact(
+            frame, spec.audio_chk, PART if spec.partition_col else None,
+            fp_fn=afp.fingerprint_hashes if spec.fp_checks else None,
+            feat_bins=spec.feat_bins or None,
+            feat_limits=spec.feat_limits or None,
+            text_col=spec.rate_text_col,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        out: Dict[Optional[str], ScanState] = {}
+
+        def counts(row_type: str, *keys: str) -> List[Any]:
+            return (compact.filter(F.col("row_type") == row_type)
+                    .groupBy("__part", *keys).agg(F.sum("hash").alias("c")).collect())
+
+        def capped(row_type: str, *keys: str) -> List[Any]:
+            # per-task caps can sum past violation_cap: re-cap per key,
+            # deterministic by clip_id
+            w = Window.partitionBy("__part", *keys).orderBy("clip_id")
+            return (compact.filter(F.col("row_type") == row_type)
+                    .withColumn("__rn", F.row_number().over(w))
+                    .filter(F.col("__rn") <= self.config.violation_cap).collect())
+
+        def state(r: Any) -> ScanState:
+            return out.setdefault(r["__part"], ScanState())
+
+        try:
+            if spec.audio_chk is not None:
+                for r in (compact.filter(F.col("row_type") == "agg").groupBy("__part")
+                          .agg(*[F.sum(c).alias(f"__audio__{c}")
+                                 for c in audio_mod.COMPACT_COUNT_COLS]).collect()):
+                    state(r).audio = {a: r[a] for a in _AUDIO_ALIASES}
+                if any(s.audio["__audio__violations"] for s in out.values()):
+                    for r in capped("vio"):
+                        state(r).audio_vio.append((r["clip_id"], r["observed"], r["__part"]))
+            if spec.feat_bins:
+                # 'fh' rows: clip_id = feature name, t = bin index
+                for r in counts("fh", "clip_id", "t"):
+                    state(r).fh.setdefault(r["clip_id"], {})[int(r["t"])] = int(r["c"])
+            if spec.feat_limits:
+                # 'fq' / 'fv' rows: t = rule index into feat_limits
+                for r in counts("fq", "t"):
+                    state(r).fq[int(r["t"])] = int(r["c"])
+                if any(s.fq for s in out.values()):
+                    for r in capped("fv", "t"):
+                        state(r).fv.setdefault(int(r["t"]), []).append(
+                            (r["clip_id"], r["observed"], r["__part"]))
+            fp = compact.filter(F.col("row_type") == "fp").select("clip_id", "hash")
+            for chk in spec.fp_checks:
+                nd = afp.audio_fingerprint_near_dup(
+                    fp, threshold=float(chk.params["score_threshold"]))
+                try:
+                    fused_fp.append((chk, self._audio_fp_result(nd, chk)))
+                finally:
+                    # the operator persists its internal hash frame; release
+                    # per check or repeated runs on one session leak blocks
+                    release_caches(nd)
+        finally:
+            compact.unpersist()
+        for s in out.values():
+            s.audio_vio.sort()
+            for samples in s.fv.values():
+                samples.sort()
+        return out
+
+    def _partition_col(self, df: DataFrame, *exclude: str) -> Optional[str]:
+        """The configured partition column, when ``df`` has it and it is
+        none of ``exclude`` (a job's own key columns)."""
+        col = self.config.partition_col
+        return col if col and col in df.columns and col not in exclude else None
 
     def _arrow_batch_conf(self):
         return _ConfScope(
@@ -1248,8 +1264,8 @@ class Validator:
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
         base = df.select(
             F.col(pk).cast("string").alias("clip_id"),
-            (F.col(partition_col).cast("string") if partition_col else F.lit(None).cast("string")
-             ).alias("partition_id"),
+            (drift_mod.partition_key(partition_col) if partition_col
+             else F.lit(None).cast("string")).alias("partition_id"),
             arr.alias("__v"),
         ).filter(F.size("__v") > 0)
         exploded = base.select(
@@ -1294,9 +1310,9 @@ class Validator:
     def _record_approx_unique(
         self,
         chk: CompiledCheck,
-        part_rows: List[Dict[str, Any]],
+        states: List[Tuple[Optional[str], ScanState]],
         global_row: Dict[str, Any],
-        partition_col: Optional[str],
+        per_partition: bool,
     ) -> None:
         """Evaluate a unique check from the shared scan's HLL sketch.
 
@@ -1309,11 +1325,8 @@ class Validator:
         """
         nn_alias, sk_alias = self._hll_aliases(chk)
         rsd = 1.04 / math.sqrt(2 ** self.config.unique_hll_lgk)
-        sketches = [
-            (str(r.get(partition_col)) if partition_col else None, r.get(sk_alias))
-            for r in part_rows
-            if r.get(sk_alias) is not None
-        ]
+        sketches = [(pid, st.metrics[sk_alias]) for pid, st in states
+                    if st.metrics.get(sk_alias) is not None]
         if not sketches:
             nn = global_row.get(nn_alias) or 0
             self._record(chk, 0.0, ResultEnum.passed, None, None,
@@ -1346,13 +1359,12 @@ class Validator:
             "approx": True, "approx_distinct": global_est,
             "nonnull": nn_global, "rsd": rsd,
         })
-        if partition_col:
-            for prow in part_rows:
-                pid = str(prow.get(partition_col))
+        if per_partition:
+            for pid, st in states:
                 est = per_part.get(pid)
                 if est is None:
                     continue
-                pm, pres, preason = judge(float(prow.get(nn_alias) or 0), est)
+                pm, pres, preason = judge(float(st.metrics.get(nn_alias) or 0), est)
                 self._record(chk, pm, pres, preason, None, partition_id=pid)
 
     # -- uniqueness (dedicated shuffle; AQE-skew-safe) ------------------------
@@ -1499,31 +1511,15 @@ class Validator:
             return self._audio_fp_result(pairs, chk)
 
     def _audio_fp_result(self, pairs: DataFrame, chk: CompiledCheck) -> dict:
-        """Count + capped example pairs from a near-dup pair frame (one
-        persisted evaluation shared by the count and the violation sample)."""
-        from pyspark import StorageLevel
+        return self._pair_result(pairs, chk, F.concat(
+            F.lit("matches="), F.col("matches").cast("string"),
+            F.lit(" score="), F.col("score").cast("string")))
 
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            metric = float(pairs.count())
-            vio_rows = None
-            if metric > 0:
-                vio_rows = pairs.orderBy("id_a", "id_b").limit(
-                    self.config.violation_cap
-                ).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.concat(F.col("id_a"), F.lit("|"), F.col("id_b")).alias("clip_id"),
-                    F.concat(
-                        F.lit("matches="), F.col("matches").cast("string"),
-                        F.lit(" score="), F.col("score").cast("string"),
-                    ).alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                ).collect()
-        finally:
-            pairs.unpersist()
-        return {"metric": metric, "vio_rows": vio_rows}
+    def _pair_result(self, pairs: DataFrame, chk: CompiledCheck, observed_expr) -> dict:
+        """Count + capped example pairs ("id_a|id_b") of a near-dup pair frame."""
+        return self._count_and_sample(
+            pairs, chk, id_expr=F.concat(F.col("id_a"), F.lit("|"), F.col("id_b")),
+            observed_expr=observed_expr, order=("id_a", "id_b"))
 
     def _image_compact(self, df: DataFrame, id_col: str, bytes_col: str,
                        with_dhash: bool, features: tuple) -> DataFrame:
@@ -1636,10 +1632,9 @@ class Validator:
             observed_expr=F.col("__observed"))
 
     def _count_and_sample(self, frame: DataFrame, chk: CompiledCheck,
-                          id_expr, observed_expr) -> dict:
-        """Shared count + capped violation sampling over one persisted
-        evaluation of a violating-row frame (used by the image check; the
-        audio_fp pair path keeps its pair-specific shape)."""
+                          id_expr, observed_expr, order=("id_a",)) -> dict:
+        """Count + capped violation sample (first rows by ``order``) over one
+        persisted evaluation of a violating-row or near-dup pair frame."""
         from pyspark import StorageLevel
 
         frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1647,7 +1642,7 @@ class Validator:
             metric = float(frame.count())
             vio_rows = None
             if metric > 0:
-                vio_rows = frame.orderBy("id_a").limit(
+                vio_rows = frame.orderBy(*order).limit(
                     self.config.violation_cap
                 ).select(
                     F.lit(self.run.runId).alias("run_id"),
@@ -1709,36 +1704,17 @@ class Validator:
         """Content uniqueness: blocked Hamming pairs over the compact
         frame's dhash column (imagefp.near_dup_pairs_from_fp — only 8-byte
         hashes shuffle); metric = pair count, violations = capped pairs."""
-        from pyspark import StorageLevel
-
         from . import imagefp
+        from .pipeline_ckpt import release_caches
 
         p = chk.params
         pairs = imagefp.near_dup_pairs_from_fp(
             compact.select("id", "dhash"),
-            max_hamming=p["max_hamming"], max_bucket=p["max_bucket"],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+            max_hamming=p["max_hamming"], max_bucket=p["max_bucket"])
         try:
-            metric = float(pairs.count())
-            vio_rows = None
-            if metric > 0:
-                vio_rows = pairs.orderBy("id_a", "id_b").limit(
-                    self.config.violation_cap
-                ).select(
-                    F.lit(self.run.runId).alias("run_id"),
-                    F.lit(None).cast("string").alias("partition_id"),
-                    F.lit(chk.key).alias("check_key"),
-                    F.concat(F.col("id_a"), F.lit("|"),
-                             F.col("id_b")).alias("clip_id"),
-                    F.concat(F.lit("hamming="),
-                             F.col("hamming").cast("string")).alias("observed"),
-                    F.lit(chk.expected).alias("expected"),
-                ).collect()
-            return {"metric": metric, "vio_rows": vio_rows}
+            return self._pair_result(pairs, chk, F.concat(
+                F.lit("hamming="), F.col("hamming").cast("string")))
         finally:
-            pairs.unpersist()
-            from .pipeline_ckpt import release_caches
-
             release_caches(pairs)
 
     def _video_compute(self, model_name: str, df: DataFrame,
@@ -1813,10 +1789,9 @@ class Validator:
             # resolve (filter applied before the anti-join, so pushdown
             # shrinks the probe side)
             df = df.filter(F.expr(flt))
-        part_col = self.config.partition_col if (
-            self.config.partition_col
-            and self.config.partition_col in df.columns
-            and self.config.partition_col != child_col) else None
+        part_col = self._partition_col(df, child_col)
+        if part_col:
+            df, part_col = df.withColumn(PART, drift_mod.partition_key(part_col)), PART
         diagnostics = None
         orphans = None
         if self.config.reference_mode == "approx":
@@ -1986,10 +1961,9 @@ class Validator:
         key, child_col, ref_col = p["key"], p["child_col"], p["ref_col"]
         if key not in df.columns or child_col not in df.columns or key not in ref.columns or ref_col not in ref.columns:
             return {"error": "join/compare column missing"}
-        part_col = self.config.partition_col if (
-            self.config.partition_col
-            and self.config.partition_col in df.columns
-            and self.config.partition_col not in (key, child_col)) else None
+        part_col = self._partition_col(df, key, child_col)
+        if part_col:
+            df, part_col = df.withColumn(PART, drift_mod.partition_key(part_col)), PART
         # inner equi-join on the key (rows absent from the reference are the
         # referential check's concern, not equality's); null-safe inequality;
         # the partition column rides along for per-partition attribution
@@ -2058,20 +2032,17 @@ class Validator:
         self, df: DataFrame, partition_col: str,
         parts: Optional[List[str]] = None,
     ) -> Dict[str, Dict[str, Any]]:
-        """{partition_id: {"files": n, "sig": md5-of-sorted-file-list}} via a
-        column-pruned scan of (partition_col, input_file_name()) distinct
+        """{partition key: {"files": n, "sig": md5-of-sorted-file-list}} via a
+        column-pruned scan of (partition key, input_file_name()) distinct
         pairs — per-partition provenance for the checkpoint manifest (north
         rule: "per-partition lineage + metrics"). In-memory frames (no
         files) yield a single empty name, which is stable across runs."""
         import hashlib
 
-        sub = df
-        if parts is not None:
-            sub = df.filter(F.col(partition_col).cast("string").isin(list(parts)))
+        key = drift_mod.partition_key(partition_col)
+        sub = df if parts is None else df.filter(key.isin(list(parts)))
         rows = (
-            sub.select(
-                F.col(partition_col).cast("string").alias("p"),
-                F.input_file_name().alias("f"))
+            sub.select(key.alias("p"), F.input_file_name().alias("f"))
             .distinct().collect()
         )
         by_part: Dict[str, List[str]] = {}
@@ -2085,80 +2056,33 @@ class Validator:
             for p, fs in by_part.items()
         }
 
-    def _checkpointed_scan(
-        self,
-        model_name: str,
-        df: DataFrame,
-        exprs: Dict[str, Column],
-        ops: Dict[str, str],
-        audio_chk: Optional[CompiledCheck],
-        partition_col: str,
-        drift_jobs: Optional[List[dict]] = None,
-        feat_bins: Optional[Dict[str, List[float]]] = None,
-        feat_limits: Optional[List[Tuple[str, Optional[float], Optional[float]]]] = None,
-        pctl_cols: Optional[List[str]] = None,
-        rate_text_col: Optional[str] = None,
-    ) -> Tuple[
-        List[Dict[str, Any]], List[Dict[str, Any]],
-        List[Tuple[Optional[str], str, str]], Dict[str, Dict[int, int]],
-        List[Dict[str, Any]], List[Dict[str, Any]],
-        Dict[Tuple[str, str], "td_mod.TDigest"],
-    ]:
-        """Chunked partitioned scan with a resume manifest.
-
-        Partition values are grouped into ``checkpoint_chunks`` groups; each group's
-        per-partition metric rows are appended to the manifest as they complete. On
-        resume, completed partitions are loaded from the manifest and their groups
-        skipped — only remaining partitions are scanned. All shared-scan metrics are
-        decomposable (sum/min/max), so merged results are identical to a full run.
-        Each partition's capped audio-violation sample (<= violation_cap rows,
-        from the same single decode pass as its metrics) is stored in its manifest
-        record, so resume reproduces violations without rescanning done partitions.
-        Loudness-drift feature histograms (``feat_bins``) are likewise per-partition
-        decomposable bin counts: they ride the SAME per-chunk decode pass, persist
-        in the manifest, and merge by summation on resume — never a second decode.
-        Signal-quality bounds (``feat_limits``) follow the same model: per-partition
-        out-of-range counts + capped violation samples persist in each manifest
-        record ("audio_quality") and merge by summation / concatenation on resume.
-        Each record also carries the partition's input-file LINEAGE (file count
-        + md5 signature of the sorted file list); on resume that signature is
-        re-probed (column-pruned scan, no payload) and any completed partition
-        whose files changed is invalidated and rescanned — a checkpoint can
-        never silently serve metrics for data that moved underneath it.
-        Percentile t-digests (``pctl_cols``, pctl_mode="sketch") are the mergeable
-        quantile state: one column-pruned digest pass per chunk, per-partition
-        digests persist as base64 ("pctl_digests") and merge associatively on
-        resume — the global quantile never needs a rescan of completed partitions
-        (unlike exact GK mode, whose global pass re-reads everything).
-        """
-        os.makedirs(self.config.checkpoint_dir, exist_ok=True)
-        manifest = self._manifest_path(model_name)
-        # signature of the check configuration whose per-partition state the
-        # manifest records: a record written under a DIFFERENT configuration
-        # (metric set, audio rules, percentile mode/columns, drift features)
-        # cannot be merged — its missing sidecar state would silently read as
-        # zero — so such partitions are invalidated and rescanned on resume
+    def _state_sig(self, model_name: str, spec: _ScanSpec) -> str:
+        """Signature of the check configuration whose per-partition state a
+        manifest record holds. A record written under a DIFFERENT
+        configuration (metric set, audio rules, percentile mode/columns,
+        drift features) cannot be merged — its missing sidecar state would
+        silently read as zero — so resume rescans such partitions."""
         import hashlib
 
-        state_sig = hashlib.md5(json.dumps({
+        return hashlib.md5(json.dumps({
             # ops covers every merged alias INCLUDING the drift bucket
             # aliases (which join ops but not exprs); the drift/feat entries
             # additionally hash the snapshot CONTENT — a rebuilt snapshot
             # with the same grid size but shifted edges (or reordered
             # categories) must also invalidate, not merge misaligned bins
-            "aliases": sorted(ops),
+            "aliases": sorted(spec.ops),
             # the alias alone can't see a SEMANTIC change that keeps the name
             # — e.g. a per-check `filter:` added to a field constraint, or an
             # edited bound — so the expression trees themselves join the
             # signature (their reprs are deterministic unresolved-plan text)
-            "exprs": sorted((k, str(v)) for k, v in exprs.items()),
-            "audio": audio_chk.key if audio_chk is not None else None,
-            "feat_bins": feat_bins or {},
-            "feat_limits": feat_limits or [],
+            "exprs": sorted((k, str(v)) for k, v in spec.exprs.items()),
+            "audio": spec.audio_chk.key if spec.audio_chk is not None else None,
+            "feat_bins": spec.feat_bins,
+            "feat_limits": spec.feat_limits,
             # a changed transcript column changes every rate metric; the
             # manifest's per-partition counts cannot be merged across it
-            "rate_text_col": rate_text_col,
-            "pctl_cols": pctl_cols or [],
+            "rate_text_col": spec.rate_text_col,
+            "pctl_cols": spec.pctl_cols,
             # sketch configs: manifest HLL sketches of a different lgConfigK
             # would make hll_union_agg throw on resume, and t-digests of a
             # different delta would merge at the wrong compression — both are
@@ -2178,9 +2102,24 @@ class Validator:
                 {"p": j["prefix"], "m": j["method"],
                  "s": {k: j["stats"].get(k) for k in
                        ("bin_edges", "quantiles", "categories", "bin_probs")}}
-                for j in (drift_jobs or [])
+                for j in spec.drift_jobs
             ],
         }, sort_keys=True, default=str).encode()).hexdigest()
+
+    def _manifest_todo(
+        self, keyed: DataFrame, manifest: str, state_sig: str,
+    ) -> Tuple[Dict[Optional[str], ScanState], List[List[str]]]:
+        """(completed partitions' states, partition-key groups still to scan)
+        for a checkpointed scan of ``keyed`` (a frame carrying the PART key).
+
+        Fresh runs scan every partition in ``checkpoint_chunks`` groups. On
+        resume the latest record of each partition is reused unless it was
+        written under another check configuration (``state_sig``) or its
+        partition's input files changed since: the lineage (file count + md5
+        of the sorted file list) is re-probed, reading only the partition
+        column, so a checkpoint never serves metrics for data that moved
+        underneath it."""
+        os.makedirs(self.config.checkpoint_dir, exist_ok=True)
         done: Dict[str, dict] = {}
         if self.config.resume and os.path.exists(manifest):
             with open(manifest, "r", encoding="utf-8") as f:
@@ -2198,15 +2137,9 @@ class Validator:
                     f"rescanning {stale[:5]}{'...' if len(stale) > 5 else ''}")
                 for p in stale:
                     del done[p]
-        parts = sorted(
-            str(r[0]) for r in df.select(partition_col).distinct().collect()
-        )
-        if done and self.config.checkpoint_verify_lineage:
-            # stale-checkpoint detection: a completed partition whose input
-            # file set changed since the manifest was written must NOT serve
-            # cached metrics — invalidate it and rescan. The lineage probe
-            # reads only the partition column (column-pruned scan, no payload).
-            current = self._partition_lineage(df, partition_col, sorted(done))
+        parts = sorted(r[0] for r in keyed.select(PART).distinct().collect())
+        if done:
+            current = self._partition_lineage(keyed, PART, sorted(done))
             for pid in sorted(done):
                 rec_lin = done[pid].get("lineage")
                 if rec_lin is not None and rec_lin != current.get(pid):
@@ -2215,181 +2148,28 @@ class Validator:
                         f"manifest (was {rec_lin}, now {current.get(pid)}) — rescanning")
                     del done[pid]
         todo = [p for p in parts if p not in done]
-        chunks: List[List[str]] = []
-        k = max(1, self.config.checkpoint_chunks)
-        size = max(1, math.ceil(len(todo) / k)) if todo else 1
-        for i in range(0, len(todo), size):
-            chunks.append(todo[i:i + size])
-
-        agg_list = [v.alias(a) for a, v in exprs.items()]
-        a_sums = [F.sum(c).alias(f"__audio__{c}") for c in audio_mod.COMPACT_COUNT_COLS]
-
-        part_rows: List[Dict[str, Any]] = []
-        audio_part_rows: List[Dict[str, Any]] = []
-        audio_vio_by_part: Dict[str, List[Tuple[Optional[str], str, str]]] = {}
-        audio_fhists: Dict[str, Dict[int, int]] = {}
-        audio_fq_rows: List[Dict[str, Any]] = []
-        audio_fv_rows: List[Dict[str, Any]] = []
-        pctl_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
-
-        def merge_fh(by_feature: Optional[Dict[str, Dict[str, int]]]) -> None:
-            for feature, bins in (by_feature or {}).items():
-                dst = audio_fhists.setdefault(feature, {})
-                for b, c in bins.items():
-                    dst[int(b)] = dst.get(int(b), 0) + int(c)
-
-        def merge_fq(pid: str, aq: Optional[Dict[str, Any]]) -> None:
-            for li, c in ((aq or {}).get("counts") or {}).items():
-                audio_fq_rows.append({"__part": pid, "t": int(li), "c": int(c)})
-            for li, vs in ((aq or {}).get("violations") or {}).items():
-                for clip_id, obs in vs:
-                    audio_fv_rows.append(
-                        {"__part": pid, "t": int(li),
-                         "clip_id": clip_id, "observed": obs})
-
-        for rec in done.values():
-            row = _json_to_metrics(rec["metrics_json"])
-            row[partition_col] = rec["partition_id"]
-            part_rows.append(row)
-            if rec.get("audio_metrics_json"):
-                arow = _json_to_metrics(rec["audio_metrics_json"])
-                arow["__part"] = rec["partition_id"]
-                audio_part_rows.append(arow)
-            for v in rec.get("audio_violations") or []:
-                audio_vio_by_part.setdefault(str(rec["partition_id"]), []).append(
-                    (rec["partition_id"], v[0], v[1]))
-            merge_fh(rec.get("audio_feature_hists"))
-            merge_fq(str(rec["partition_id"]), rec.get("audio_quality"))
-            for col, b64 in (rec.get("pctl_digests") or {}).items():
-                pctl_digests[(str(rec["partition_id"]), col)] = (
-                    td_mod.TDigest.from_b64(b64))
-
+        size = max(1, math.ceil(len(todo) / max(1, self.config.checkpoint_chunks)))
+        groups = [todo[i:i + size] for i in range(0, len(todo), size)]
         self.run.log_info(
             f"checkpoint: {len(done)}/{len(parts)} partitions already complete; "
-            f"{len(todo)} to scan in {len(chunks)} chunk(s)"
+            f"{len(todo)} to scan in {len(groups)} chunk(s)"
         )
+        return {p: ScanState.from_record(rec) for p, rec in done.items()}, groups
 
-        for chunk in chunks:
-            sub = df.filter(F.col(partition_col).cast("string").isin(chunk))
-            rows = [r.asDict() for r in sub.groupBy(partition_col).agg(*agg_list).collect()]
-            if drift_jobs:
-                self._merge_drift_rows(
-                    rows,
-                    drift_mod.drift_bucket_rows(sub, drift_jobs, partition_col),
-                    drift_jobs, partition_col,
-                )
-            audio_rows_by_part: Dict[str, dict] = {}
-            chunk_vio_by_part: Dict[str, List[Tuple[str, str]]] = {}
-            chunk_fh_by_part: Dict[str, Dict[str, Dict[str, int]]] = {}
-            chunk_aq_by_part: Dict[str, Dict[str, Any]] = {}
-            chunk_lineage = self._partition_lineage(sub, partition_col)
-            chunk_digests: Dict[Tuple[str, str], td_mod.TDigest] = {}
-            if pctl_cols:
-                # mergeable quantile state for this chunk's partitions: one
-                # column-pruned digest pass (payload never read)
-                chunk_digests = td_mod.collect_digests(
-                    sub, pctl_cols, partition_col,
-                    self.config.pctl_tdigest_delta)
-            if audio_chk is not None or feat_bins or feat_limits:
-                from pyspark import StorageLevel
-
-                compact = self._audio_compact(
-                    sub, audio_chk, partition_col, feat_bins=feat_bins or None,
-                    feat_limits=feat_limits or None, text_col=rate_text_col)
-                compact = compact.persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    with self._arrow_batch_conf():
-                        if feat_bins:
-                            for r in (
-                                compact.filter(F.col("row_type") == "fh")
-                                .groupBy("__part", "clip_id", "t")
-                                .agg(F.sum("hash").alias("c")).collect()
-                            ):
-                                chunk_fh_by_part.setdefault(str(r["__part"]), {}) \
-                                    .setdefault(r["clip_id"], {})[str(r["t"])] = int(r["c"])
-                        if feat_limits:
-                            for r in self._fq_count_frame(compact).collect():
-                                d = chunk_aq_by_part.setdefault(
-                                    str(r["__part"]), {"counts": {}, "violations": {}})
-                                d["counts"][str(r["t"])] = int(r["c"])
-                            if chunk_aq_by_part:
-                                for r in self._fv_capped_frame(
-                                    compact, per_partition=True
-                                ).collect():
-                                    d = chunk_aq_by_part.setdefault(
-                                        str(r["__part"]), {"counts": {}, "violations": {}})
-                                    d["violations"].setdefault(str(r["t"]), []).append(
-                                        [r["clip_id"], r["observed"]])
-                        if audio_chk is not None:
-                            audio_rows_by_part = {
-                                str(r["__part"]): r.asDict()
-                                for r in compact.filter(F.col("row_type") == "agg")
-                                .groupBy("__part").agg(*a_sums).collect()
-                            }
-                        if any((r.get("__audio__violations") or 0) > 0
-                               for r in audio_rows_by_part.values()):
-                            # re-cap per partition (per-task caps can sum past it)
-                            w = Window.partitionBy("__part").orderBy("clip_id")
-                            for r in (
-                                compact.filter(F.col("row_type") == "vio")
-                                .withColumn("__rn", F.row_number().over(w))
-                                .filter(F.col("__rn") <= self.config.violation_cap)
-                                .select("__part", "clip_id", "observed").collect()
-                            ):
-                                chunk_vio_by_part.setdefault(str(r["__part"]), []).append(
-                                    (r["clip_id"], r["observed"]))
-                finally:
-                    compact.unpersist()
-            with open(manifest, "a", encoding="utf-8") as f:
-                for row in rows:
-                    pid = str(row[partition_col])
-                    arow = audio_rows_by_part.get(pid)
-                    vlist = chunk_vio_by_part.get(pid, [])
-                    fh = chunk_fh_by_part.get(pid)
-                    aq = chunk_aq_by_part.get(pid)
-                    digs = {
-                        col: chunk_digests[(pid, col)].to_b64()
-                        for col in (pctl_cols or [])
-                        if (pid, col) in chunk_digests
-                    }
-                    f.write(json.dumps({
-                        "run_id": self.run.runId,
-                        "partition_id": pid,
-                        "status": "done",
-                        "metrics_json": _metrics_to_json(row, partition_col),
-                        "audio_metrics_json": _metrics_to_json(arow, "__part") if arow else None,
-                        "audio_violations": vlist or None,
-                        "audio_feature_hists": fh or None,
-                        "audio_quality": aq or None,
-                        "pctl_digests": digs or None,
-                        "lineage": chunk_lineage.get(pid),
-                        "state_sig": state_sig,
-                        "ts": dt.datetime.now(dt.timezone.utc).isoformat(),
-                    }) + "\n")
-                    part_rows.append(row)
-                    if arow:
-                        audio_part_rows.append(arow)
-                    if vlist:
-                        audio_vio_by_part[pid] = [(pid, c, o) for c, o in vlist]
-                    merge_fh(fh)
-                    merge_fq(pid, aq)
-                    for (dpid, col), d in chunk_digests.items():
-                        if dpid == pid:
-                            pctl_digests[(pid, col)] = d
-        # global cap across partitions, deterministic by clip_id
-        audio_vio = sorted(
-            (v for vs in audio_vio_by_part.values() for v in vs), key=lambda t: t[1]
-        )[: self.config.violation_cap]
-        # signal-quality violation samples: re-cap globally per rule index,
-        # deterministic by clip_id (per-partition caps can sum past the cap)
-        fv_by_li: Dict[int, List[Dict[str, Any]]] = {}
-        for r in sorted(audio_fv_rows, key=lambda r: (r["t"], r["clip_id"])):
-            lst = fv_by_li.setdefault(int(r["t"]), [])
-            if len(lst) < self.config.violation_cap:
-                lst.append(r)
-        audio_fv_rows = [r for li in sorted(fv_by_li) for r in fv_by_li[li]]
-        return (part_rows, audio_part_rows, audio_vio, audio_fhists,
-                audio_fq_rows, audio_fv_rows, pctl_digests)
+    def _append_records(self, manifest: str,
+                        states: Dict[Optional[str], ScanState],
+                        state_sig: str) -> None:
+        """Append one completed chunk's partitions to the JSONL manifest."""
+        with open(manifest, "a", encoding="utf-8") as f:
+            for pid in sorted(states):
+                f.write(json.dumps({
+                    "run_id": self.run.runId,
+                    "partition_id": pid,
+                    "status": "done",
+                    **states[pid].to_record(),
+                    "state_sig": state_sig,
+                    "ts": dt.datetime.now(dt.timezone.utc).isoformat(),
+                }) + "\n")
 
     # -- result recording -------------------------------------------------------
 
@@ -2510,15 +2290,17 @@ def _drift_prefix(chk: CompiledCheck) -> str:
     return f"__drift__{chk.key}"
 
 
-def _metrics_to_json(row: Optional[Dict[str, Any]], partition_col: str) -> str:
+def _metrics_to_json(row: Dict[str, Any]) -> str:
     import base64
 
     out = {}
-    for k, v in (row or {}).items():
-        if k == partition_col:
-            continue
-        if isinstance(v, (dt.datetime, dt.date)):
+    for k, v in row.items():
+        if isinstance(v, dt.datetime):
             out[k] = {"__ts__": v.isoformat()}
+        elif isinstance(v, dt.date):
+            # a date must come back a date: min/max against a fresh
+            # partition's date would raise on a datetime
+            out[k] = {"__date__": v.isoformat()}
         elif isinstance(v, (bytes, bytearray)):
             # e.g. the approx-unique HLL sketch: mergeable binary state
             out[k] = {"__b64__": base64.b64encode(bytes(v)).decode("ascii")}
@@ -2538,6 +2320,8 @@ def _json_to_metrics(blob: str) -> Dict[str, Any]:
                 out[k] = dt.datetime.fromisoformat(v["__ts__"])
             except ValueError:
                 out[k] = None
+        elif isinstance(v, dict) and "__date__" in v:
+            out[k] = dt.date.fromisoformat(v["__date__"])
         elif isinstance(v, dict) and "__b64__" in v:
             out[k] = base64.b64decode(v["__b64__"])
         else:

@@ -164,6 +164,12 @@ def plan(
         jobs.append(PlannedJob("schema", "schema", schema_checks,
                                "driver-only schema check (no scan)"))
     scan = _shared_scan(checks, config, snaps, part_col, resume_active)
+    if config.checkpoint_dir and not part_col:
+        # the manifest keys its records by partition: without a partition
+        # column the run is one in-memory chunk and nothing is resumable
+        scan.reason += (" (checkpoint_dir ignored: "
+                        + (f"partition column {config.partition_col} not in the table"
+                           if config.partition_col else "no partition_col") + ")")
     jobs.append(scan)
 
     in_scan = {id(c) for c in scan.checks}

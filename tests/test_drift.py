@@ -184,9 +184,9 @@ models:
 
 
 def test_bucket_rows_null_partition_keyed_as_string(spark):
-    """Review finding: NULL partition values must key under the string
-    'None' (the engine merges by str(partition_value)) — a Python-None key
-    would collide with the no-partition sentinel and those rows' counts
+    """Review finding: NULL partition values must key under a string (the
+    NULL_PARTITION sentinel every per-partition state uses) — a Python-None
+    key would collide with the no-partition sentinel and those rows' counts
     silently vanish from the global drift statistic."""
     from dcspark import drift as drift_mod
     from pyspark.sql import functions as F
@@ -198,7 +198,7 @@ def test_bucket_rows_null_partition_keyed_as_string(spark):
     stats = drift_mod.build_ref_stats(df.select("x"), ["x"])
     checks = [{"prefix": "c0", "column": "x", "method": "ks", "stats": stats["x"]}]
     out = drift_mod.drift_bucket_rows(df, checks, partition_col="bucket")
-    assert "None" in out, f"null partition missing: {list(out)}"
+    assert drift_mod.NULL_PARTITION in out, f"null partition missing: {list(out)}"
     assert None not in out
     total = sum(d.get("c0__count", 0) for d in out.values())
     assert total == 100  # every row counted exactly once

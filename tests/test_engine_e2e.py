@@ -143,7 +143,10 @@ def test_single_decode_pass_even_with_violations(spark, spec, ref_stats):
 
 def test_checkpoint_resume_reproduces_audio_violations(spark, spec, ref_stats):
     """Resume must reproduce the capped violation sample from the manifest
-    without rescanning completed partitions."""
+    without rescanning completed partitions. A partitioned run with no
+    checkpoint_dir (one in-memory chunk) must give the same metrics,
+    per-partition results rows and violation rows as the checkpointed and
+    the killed-then-resumed runs."""
     corrupt = {"bad_sr": 0.2}
     clips = synth.generate_audio_table(
         spark, N, seed=SEED, corrupt=corrupt, dur_lo=DUR[0], dur_hi=DUR[1], num_partitions=4
@@ -175,6 +178,21 @@ def test_checkpoint_resume_reproduces_audio_violations(spark, spec, ref_stats):
             }
 
         assert vio_set(resumed) == vio_set(full) != set()
+
+        plain = validate(spark, spec, tables, _cfg(ref_stats, partition_col="bucket"))
+        assert plain.metrics == full.metrics
+
+        def part_rows(res):
+            return sorted((
+                tuple(sorted((k, v) for k, v in r.items()
+                             if k not in ("run_id", "ts_start", "ts_end")))
+                for r in res.results if r["partition_id"] is not None), key=repr)
+
+        def vio_rows(res):
+            return sorted((tuple(r)[1:] for r in res.violations.collect()), key=repr)
+
+        assert part_rows(plain) == part_rows(full) == part_rows(resumed) != []
+        assert vio_rows(plain) == vio_rows(full) == vio_rows(resumed) != []
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

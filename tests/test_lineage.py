@@ -82,14 +82,36 @@ def test_resume_invalidates_changed_partition(spark, tmp_path):
     assert _run(spark, base, ck, resume=True).metrics[METRIC] == 1150.0
 
 
-def test_lineage_verification_can_be_disabled(spark, tmp_path):
+def test_null_and_none_partitions_stay_distinct(spark, tmp_path):
+    """A NULL partition value and the string "None" are two partitions. Flat,
+    partitioned and checkpointed runs must agree on the global metrics and
+    the verdict. Keyed by str(value), the checkpointed run never scanned the
+    NULL partition (and its missing clip_id), scanned "None" twice, and
+    passed a failing table."""
+    from dcspark.run_model import ResultEnum
+
     base, ck = str(tmp_path / "data"), str(tmp_path / "ck")
-    _write_part(spark, base, "a", [("c1", 100)])
-    _write_part(spark, base, "b", [("c2", 50)])
-    _run(spark, base, ck)
-    _write_part(spark, base, "b", [("c2", 50), ("c9", 1000)])
-    stale = _run(spark, base, ck, resume=True, checkpoint_verify_lineage=False)
-    assert stale.metrics[METRIC] == 150.0  # documented: stale cache served
+    spark.createDataFrame(
+        [("c1", "a", 100), (None, None, 200), ("c3", None, 5), ("c4", "None", 400)],
+        "clip_id string, part string, dur_ms int",
+    ).coalesce(1).write.parquet(base)
+    df = spark.read.parquet(base)
+    spec = DataContractSpecification.from_string(CONTRACT)
+    flat, parted, ckpt = [
+        validate(spark, spec, {"clips": df}, ValidationConfig(**cfg)) for cfg in (
+            {}, {"partition_col": "part"},
+            {"partition_col": "part", "checkpoint_dir": ck, "checkpoint_chunks": 4})]
+    assert flat.metrics[METRIC] == 705.0
+    assert flat.metrics["clips__clip_id__field_required"] == 1.0
+    for res in (flat, parted, ckpt):
+        assert res.metrics == flat.metrics
+        assert res.run.result == ResultEnum.failed
+    for res in (parted, ckpt):
+        per_part = sorted(r["metric_value"] for r in res.results
+                          if r["check_key"] == METRIC and r["partition_id"] is not None)
+        assert per_part == [100.0, 205.0, 400.0]
+        assert len({r["partition_id"] for r in res.results
+                    if r["partition_id"] is not None}) == 3
 
 
 def test_resume_invalidates_config_change(spark, tmp_path):

@@ -1010,6 +1010,23 @@ def test_cli_test_dry_run_rejects_bad_model(capsys):
               "--where", "1=1", "--model", "nope"])
 
 
+def test_cli_test_checkpoint_without_partition_col_is_an_error(capsys, tmp_path):
+    """A checkpoint the engine cannot key by partition would be silently
+    ignored (the run is not resumable), so the parser refuses it."""
+    from dcspark.cli import main
+
+    for flags in (["--checkpoint-dir", str(tmp_path / "ck")],
+                  ["--resume"],
+                  ["--partition-col", "p", "--resume"]):
+        with pytest.raises(SystemExit) as exc:
+            main(["test", "contracts/audio_clips.yaml", "--dry-run", *flags])
+        assert exc.value.code == 2
+        assert "--resume" in capsys.readouterr().err
+    assert main(["test", "contracts/audio_clips.yaml", "--dry-run",
+                 "--partition-col", "p", "--checkpoint-dir", str(tmp_path / "ck"),
+                 "--resume"]) == 0
+
+
 def test_exit_code_reference_parity():
     """Review finding: the reference exits 0 for passed AND warning runs,
     1 for everything else INCLUDING unknown (fail closed)."""

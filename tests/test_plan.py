@@ -1,5 +1,7 @@
 """plan(): the one decision of which job each check rides (pure: no Spark)."""
 
+import pyspark.sql.types as T
+
 from dcspark.compile import create_checks
 from dcspark.engine import ValidationConfig, Validator
 from dcspark.plan import plan
@@ -82,6 +84,19 @@ def test_percentile_sub_passes_are_planned():
     assert "percentile global" in _jobs({}, partition_col="p")["shared_scan"].passes
     sketch = _jobs({}, partition_col="p", pctl_mode="sketch")["shared_scan"]
     assert "t-digest" in sketch.passes and "percentile global" not in sketch.passes
+
+
+def test_ignored_checkpoint_dir_is_stated():
+    """A checkpoint_dir with no partition column keys nothing: the run is
+    one in-memory chunk, and the shared scan's reason says so."""
+    assert "ignored" not in _jobs({}, partition_col="p",
+                                  checkpoint_dir="ck")["shared_scan"].reason
+    reason = _jobs({}, checkpoint_dir="ck")["shared_scan"].reason
+    assert "checkpoint_dir ignored: no partition_col" in reason
+    schema = T.StructType([T.StructField("dur_ms", T.IntegerType())])
+    scan = [j for j in plan("clips", _checks(), ValidationConfig(
+        partition_col="p", checkpoint_dir="ck"), schema, {}) if j.kind == "shared_scan"]
+    assert "checkpoint_dir ignored: partition column p not in the table" in scan[0].reason
 
 
 def test_fingerprint_fusion_follows_the_audio_scan():

@@ -6,13 +6,17 @@ zero-copy view path over sliced buffers), SNR semantics, the decomposable
 metric merge, the 8-way threshold evaluator, and period parsing.
 """
 
+import datetime as dt
+import functools
+import json
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from dcspark import audio, synth
 from dcspark.compile import period_to_seconds, to_threshold_evaluator
-from dcspark.engine import _merge_rows
+from dcspark.engine import ScanState, _merge_rows
 from dcspark.run_model import ResultEnum
 from dcspark.spec import Quality
 
@@ -148,6 +152,73 @@ def test_merge_rows_ignores_nulls(values):
     merged = _merge_rows(rows, {"m": "sum"})
     present = [v for v in values if v is not None]
     assert merged["m"] == (sum(present) if present else None)
+
+
+STATE_OPS = {"n": "sum", "lo": "min", "hi": "max", "day": "max", "sk": "union"}
+STATE_CAP = 3
+_samples = st.lists(st.tuples(st.text(alphabet="abcde", min_size=1, max_size=3),
+                              st.sampled_from(["x", "y"])), max_size=5)
+_stamps = st.datetimes(dt.datetime(2000, 1, 1), dt.datetime(2030, 1, 1))
+
+
+@st.composite
+def _partition_states(draw):
+    """(partition key, ScanState) pairs shaped like one chunk's scan output:
+    capped samples sorted by clip_id, one HLL sketch per partition."""
+    out = []
+    for i in range(draw(st.integers(1, 6))):
+        pid = f"p{i}"
+
+        def capped(samples):
+            return sorted({(c, o, pid) for c, o in samples})[:STATE_CAP]
+
+        out.append((pid, ScanState(
+            metrics={"n": draw(st.one_of(st.none(), st.integers(0, 10**6))),
+                     "lo": draw(_stamps), "hi": draw(_stamps),
+                     "day": draw(_stamps).date(), "sk": draw(st.binary(min_size=1, max_size=8))},
+            audio={"__audio__rows": draw(st.integers(0, 50)),
+                   "__audio__violations": draw(st.integers(0, 50))},
+            audio_vio=capped(draw(_samples)),
+            fh={"rms_dbfs": draw(st.dictionaries(st.integers(0, 4), st.integers(1, 9)))},
+            fq=draw(st.dictionaries(st.integers(0, 2), st.integers(1, 9))),
+            fv={li: capped(draw(_samples)) for li in range(draw(st.integers(0, 2)))},
+        )))
+    return out
+
+
+@SMALL
+@given(states=_partition_states(), data=st.data())
+def test_scan_state_merge_is_chunking_free(states, data):
+    """Folding partition states chunk by chunk, each partition round-tripped
+    through its manifest record JSON, equals the one-chunk fold: the
+    invariant that makes a plain run, a checkpointed run and a resumed run
+    report the same thing."""
+    def fold(parts):
+        return functools.reduce(
+            lambda a, b: a.merge(b, STATE_OPS, STATE_CAP), parts, ScanState())
+
+    def roundtrip(pid, state):
+        rec = json.loads(json.dumps({"partition_id": pid, **state.to_record()}))
+        return ScanState.from_record(rec)
+
+    chunk_of = data.draw(st.lists(st.integers(0, 3), min_size=len(states),
+                                  max_size=len(states)))
+    one = fold([s for _, s in states])
+    chunked = fold([
+        fold([roundtrip(pid, s) for (pid, s), c in zip(states, chunk_of) if c == k])
+        for k in range(4)])
+    assert chunked == one
+
+    metrics = [s.metrics for _, s in states]
+    present = [m["n"] for m in metrics if m["n"] is not None]
+    assert one.metrics["n"] == (sum(present) if present else None)
+    assert one.metrics["lo"] == min(m["lo"] for m in metrics)
+    assert one.metrics["day"] == max(m["day"] for m in metrics)
+    sketches = sorted(m["sk"] for m in metrics)
+    assert one.metrics["sk"] == (sketches if len(sketches) > 1 else sketches[0])
+    assert one.audio_vio == sorted(v for _, s in states for v in s.audio_vio)[:STATE_CAP]
+    assert one.fq == {li: sum(s.fq.get(li, 0) for _, s in states)
+                      for li in {li for _, s in states for li in s.fq}}
 
 
 # ---------------------------------------------------------------------------
